@@ -87,7 +87,11 @@ def build_session(
       broadcast instead of shuffling the fact table.
     - Arrow enabled for the pandas_udf / applyInPandas slow path.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default to the cores this process may run on: a fixed local[32]
+    # oversubscribes small boxes (the TxTable tier anti-scales)
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

@@ -68,9 +68,7 @@ def set_ingestion_date_where_null_tx(
     into the new snapshot by reference, and the commit is atomic.
     O(affected files) instead of O(table) — on a 100 TB table where
     only the last batch is unstamped, this touches one commit's worth
-    of files.  With delta-spark present the identical call maps to
-    ``DeltaTable.update`` (see txtable.delta_available); the TxTable
-    path is the self-contained equivalent."""
+    of files — the self-contained equivalent of ``DeltaTable.update``."""
     from .txtable import TxTable
 
     t = TxTable(spark, root)

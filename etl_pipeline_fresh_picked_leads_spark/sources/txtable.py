@@ -8,8 +8,7 @@ crash mid-overwrite.  Real deployments solve this with Delta/Iceberg;
 this module re-implements the public core of that idea (a Delta-style
 `_delta_log` / Iceberg-style snapshot manifest) with nothing but
 parquet + POSIX rename semantics, so the engine has honest
-transactional behavior in this environment and a single seam where
-Delta slots in when its jars are present (see ``delta_available``).
+transactional behavior in this environment.
 
 Layout::
 
@@ -19,9 +18,10 @@ Layout::
       _txlog/v0000000002.json             {"version", "op", "files"}
 
 - **Snapshot reads**: the live table is exactly the file list of the
-  highest manifest; ``read()`` hands that list to
-  ``spark.read.parquet(*files)``.  Writers never modify referenced
-  files, so readers are isolated for free.
+  highest manifest; ``read()`` hands that list to ``_scan``, the one
+  scan of committed files (manifest schema, colmap, deletion
+  vectors).  Writers never modify referenced files, so readers are
+  isolated for free.
 - **Atomic commit**: a manifest is staged to a temp name and
   hard-linked (``os.link`` — atomic + exclusive on POSIX) into place.
   A crash anywhere before the link leaves the previous snapshot
@@ -55,11 +55,11 @@ abstraction; use it there).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
 import uuid
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -95,18 +95,7 @@ class TxConstraintViolation(RuntimeError):
     committed."""
 
 
-def delta_available() -> bool:
-    """True when delta-spark is importable — the seam where TxTable
-    operations would be routed to DeltaTable.update/merge instead."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@dataclass(frozen=True)
+@dataclasses.dataclass(frozen=True)
 class TxSnapshot:
     version: int
     op: str
@@ -373,12 +362,7 @@ class TxTable:
         snap = self.snapshot(version)
         if snap is None:
             raise FileNotFoundError(f"no committed version under {self.root}")
-        return self._read_files(
-            list(snap.files),
-            snap.schema_json,
-            self._colmap_or_none(snap),
-            dvs=dict(snap.dvs) if snap.dvs else None,
-        )
+        return self._scan(snap)
 
     # ------------------------------------------------- column mapping
 
@@ -439,48 +423,103 @@ class TxTable:
             suffix += 1
         return f"{name}__v{suffix}"
 
-    def _read_files(
-        self,
-        files: list,
-        schema_json: str | None,
-        colmap: list[dict] | None = None,
-        dvs: dict | None = None,
-    ) -> DataFrame:
-        """Every scan of committed files goes through here so the
-        manifest schema governs even mixed-schema file sets (files
-        predating an add_column would otherwise decide the schema by
-        footer order — silently dropping the new column in a
-        copy-on-write rewrite).  With a non-identity ``colmap`` the
-        files are read under their PHYSICAL schema and projected back
-        to logical names (renames never rewrite data).  With ``dvs``
-        (the snapshot's deletion vectors) rows named by a DV sidecar
-        are anti-joined out — the merge-on-read half of DELETE."""
-        live = self._live_dvs(files, dvs)
-        if live:
-            scanned = self._scan_with_pos(files, schema_json, colmap)
-            return self._anti_dv(scanned, live).drop("_fp", "_pos")
-        reader = self.spark.read
-        if schema_json is None:
-            return reader.parquet(*files)
-        from pyspark.sql.types import StructType
+    # ``_scan`` meta key -> (_metadata field, column name, type)
+    _META = {
+        "fp": ("file_path", "_fp", "string"),
+        "pos": ("row_index", "_pos", "bigint"),
+    }
 
-        logical = StructType.fromJson(json.loads(schema_json))
-        if self._is_identity(colmap):
-            return reader.schema(logical).parquet(*files)
-        return self._phys_read(files, logical, colmap).select(
-            *self._logical_select(logical, colmap)
-        )
+    def _scan(
+        self,
+        snap: TxSnapshot,
+        files: "list | tuple | None" = None,
+        meta: tuple = (),
+    ) -> DataFrame:
+        """THE scan of committed data files (default: all of ``snap``'s)
+        under that snapshot's manifest schema, column mapping and
+        deletion vectors — no caller can apply one and forget another.
+
+        - Schema: the manifest schema governs even mixed-schema file
+          sets (files predating an add_column would otherwise decide
+          the schema by footer order — silently dropping the new column
+          in a copy-on-write rewrite).
+        - Colmap: under a non-identity mapping the files are read under
+          their PHYSICAL schema and projected back to logical names
+          (renames never rewrite data).
+        - DVs: rows named by the snapshot's sidecars for THESE files
+          are anti-joined out — the merge-on-read half of DELETE.  A
+          DV-less file set stays the bare parquet scan (plans and
+          pre-DV behavior bit-identical).
+
+        ``meta`` keeps ``"fp"`` (``_fp``, the source file URI) and/or
+        ``"pos"`` (``_pos``, ``_metadata.row_index`` — the row's
+        ordinal within its immutable file, the identity DVs key on).
+        ``_metadata`` resolves only directly against the file source,
+        so both are projected here, before any join/filter and before
+        the physical->logical projection.  A projected name is
+        reserved (ADVICE r9): a table column so named would be silently
+        overwritten, then dropped.  A DV'd file set projects both.  An
+        empty file list is an empty frame of the snapshot's schema
+        (+ ``meta``)."""
+        from pyspark.sql.types import StructField, StructType
+
+        files = list(snap.files) if files is None else list(files)
+        dvs = snap.dvs or {}
+        live = {f: dvs[f] for f in files if f in dvs}
+        want = [m for m in ("fp", "pos") if m in meta or live]
+        if want and snap.schema_json is not None:
+            fields = {
+                f["name"] for f in json.loads(snap.schema_json)["fields"]
+            }
+            if {self._META[m][1] for m in want} & fields:
+                raise ValueError(
+                    "deletion-vector operations reserve the _fp/_pos "
+                    "column names; rename the table column first"
+                )
+        if not files:
+            schema = self._current_schema(snap)
+            for m in want:
+                schema = schema.add(*self._META[m][1:])
+            return self.spark.createDataFrame([], schema)
+        reader = self.spark.read
+        logical = phys = None
+        if snap.schema_json is not None:
+            logical = StructType.fromJson(json.loads(snap.schema_json))
+            cm = self._colmap_or_none(snap)
+            if not self._is_identity(cm):
+                phys = {c["name"]: c["phys"] for c in cm}
+            reader = reader.schema(
+                logical
+                if phys is None
+                else StructType(
+                    [
+                        StructField(
+                            phys.get(f.name, f.name), f.dataType, f.nullable
+                        )
+                        for f in logical.fields
+                    ]
+                )
+            )
+        df = reader.parquet(*files)
+        for m in want:
+            field, name, _ = self._META[m]
+            df = df.withColumn(name, F.col(f"_metadata.{field}"))
+        if phys is not None:
+            df = df.select(
+                *[
+                    F.col(phys.get(f.name, f.name)).alias(f.name)
+                    for f in logical.fields
+                ],
+                *[F.col(self._META[m][1]) for m in want],
+            )
+        if live:
+            df = self._dv_join(
+                df, {p for v in live.values() for p in v}, "left_anti"
+            )
+        dropped = [self._META[m][1] for m in want if m not in meta]
+        return df.drop(*dropped) if dropped else df
 
     # ------------------------------------------------ deletion vectors
-
-    @staticmethod
-    def _live_dvs(files: list, dvs: dict | None) -> dict | None:
-        """The DV entries that apply to THIS file set, or None — the
-        None fast path keeps every DV-less read's plan (and every
-        pre-DV table's behavior) bit-identical."""
-        if not dvs:
-            return None
-        return {f: dvs[f] for f in files if f in dvs} or None
 
     @staticmethod
     def _dvs_of(snap: "TxSnapshot | None") -> dict | None:
@@ -553,88 +592,23 @@ class TxTable:
         ``file:///x``); manifests and DV sidecars store plain paths."""
         return F.regexp_replace(F.col("_fp"), "^file:(//)?", "")
 
-    def _scan_with_pos(
-        self,
-        files: list,
-        schema_json: str | None,
-        colmap: list[dict] | None = None,
-    ) -> DataFrame:
-        """Snapshot scan carrying ``_fp`` (source file URI) and
-        ``_pos`` (``_metadata.row_index`` — the row's ordinal within
-        its immutable parquet file, the stable row identity DVs key
-        on).  Like ``_scan_with_fp``, metadata columns must be
-        projected before any join/filter and, under a colmap, before
-        the physical->logical projection.
-
-        ``_fp``/``_pos`` are reserved on every DV code path, not just
-        merge(mode='dv') (ADVICE r9): a table column with either name
-        would be silently overwritten here and then dropped by
-        ``_read_files``/``_anti_dv``, changing the read schema."""
-        if schema_json is not None:
-            fields = {
-                f["name"] for f in json.loads(schema_json)["fields"]
-            }
-            if {"_fp", "_pos"} & fields:
-                raise ValueError(
-                    "deletion-vector operations reserve the _fp/_pos "
-                    "column names; rename the table column first"
-                )
-        if schema_json is None or self._is_identity(colmap):
-            return (
-                self._read_files(files, schema_json)
-                .withColumn("_fp", F.col("_metadata.file_path"))
-                .withColumn("_pos", F.col("_metadata.row_index"))
-            )
-        from pyspark.sql.types import StructType
-
-        logical = StructType.fromJson(json.loads(schema_json))
-        raw = (
-            self._phys_read(files, logical, colmap)
-            .withColumn("_fp", F.col("_metadata.file_path"))
-            .withColumn("_pos", F.col("_metadata.row_index"))
-        )
-        return raw.select(
-            *self._logical_select(logical, colmap),
-            F.col("_fp"),
-            F.col("_pos"),
-        )
-
-    def _anti_dv(self, scanned: DataFrame, live: dict) -> DataFrame:
-        """Subtract DV-named rows from a ``_scan_with_pos`` frame: one
-        equi anti-join on (file, position).  The DV side is deleted
-        rows only — AQE broadcasts it when small (the scattered-
-        mutation common case); a huge accumulated DV set shuffles,
-        which is the signal to ``compact()`` and re-materialize."""
-        paths = sorted({p for v in live.values() for p in v})
-        dv = self.spark.read.schema(_DV_SCHEMA).parquet(*paths)
+    def _dv_join(self, scanned: DataFrame, paths, how: str) -> DataFrame:
+        """Join a ``_fp``/``_pos``-carrying scan against the DV
+        sidecars ``paths`` on (file, position): ``left_anti`` subtracts
+        the deleted rows (every DV'd read), ``left_semi`` recovers them
+        (the change feed).  The DV side is deleted rows only — AQE
+        broadcasts it when small (the scattered-mutation common case);
+        a huge accumulated DV set shuffles, which is the signal to
+        ``compact()`` and re-materialize."""
+        dv = self.spark.read.schema(_DV_SCHEMA).parquet(*sorted(set(paths)))
         d = scanned.withColumn("_fpn", self._norm_fp()).alias("d")
         out = d.join(
             dv.alias("v"),
             (F.col("d._fpn") == F.col("v.file"))
             & (F.col("d._pos") == F.col("v.pos")),
-            "left_anti",
+            how,
         )
         return out.drop("_fpn")
-
-    def _phys_read(self, files, logical, colmap) -> DataFrame:
-        from pyspark.sql.types import StructField, StructType
-
-        phys = {c["name"]: c["phys"] for c in colmap}
-        phys_schema = StructType(
-            [
-                StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-                for f in logical.fields
-            ]
-        )
-        return self.spark.read.schema(phys_schema).parquet(*files)
-
-    @staticmethod
-    def _logical_select(logical, colmap) -> list[Column]:
-        phys = {c["name"]: c["phys"] for c in colmap}
-        return [
-            F.col(phys.get(f.name, f.name)).alias(f.name)
-            for f in logical.fields
-        ]
 
     # -------------------------------------------------------- commits
 
@@ -860,7 +834,7 @@ class TxTable:
     @staticmethod
     def _check_columns(df: DataFrame, base: "TxSnapshot | None", op: str) -> None:
         """Reject writes whose column NAMES don't match the table's
-        manifest schema (Delta rejects these too): ``_read_files``
+        manifest schema (Delta rejects these too): ``_scan``
         imposes the manifest schema by name, so a misnamed/missing
         column would silently read back NULL-filled and an extra
         column would be silently dropped.  ``add_column`` is the
@@ -1896,7 +1870,7 @@ class TxTable:
                 f"{missing[0]}"
             )
         # A pre-schema-era target must not revert the table to
-        # footer-order schema governance (the hazard _read_files
+        # footer-order schema governance (the hazard _scan
         # documents): adopt the target files' schema into the manifest.
         schema_json = target.schema_json
         if schema_json is None:
@@ -1970,21 +1944,8 @@ class TxTable:
         head = self.snapshot(until)
         if old is None or head is None:
             raise FileNotFoundError(f"no committed version under {self.root}")
-        new_files = [f for f in head.files if f not in set(old.files)]
-        if not new_files:
-            from pyspark.sql.types import StructType
-
-            schema = (
-                StructType.fromJson(json.loads(head.schema_json))
-                if head.schema_json
-                else self.read().schema
-            )
-            return self.spark.createDataFrame([], schema)
-        return self._read_files(
-            new_files,
-            head.schema_json,
-            self._colmap_or_none(head),
-            dvs=self._dvs_of(head),
+        return self._scan(
+            head, [f for f in head.files if f not in set(old.files)]
         )
 
     def _dv_new_rows(
@@ -2006,23 +1967,13 @@ class TxTable:
                 files.append(f)
         if not new_paths:
             return None
-        dv = self.spark.read.schema(_DV_SCHEMA).parquet(
-            *sorted(set(new_paths))
+        # scan WITHOUT cur's vectors: the rows they name are the point
+        scanned = self._scan(
+            dataclasses.replace(cur, dvs=None), files, meta=("fp", "pos")
         )
-        scanned = self._scan_with_pos(
-            files, cur.schema_json, self._colmap_or_none(cur)
-        ).withColumn("_fpn", self._norm_fp())
-        out = (
-            scanned.alias("d")
-            .join(
-                dv.alias("v"),
-                (F.col("d._fpn") == F.col("v.file"))
-                & (F.col("d._pos") == F.col("v.pos")),
-                "left_semi",
-            )
-            .drop("_fpn", "_fp", "_pos")
+        return self._dv_join(scanned, new_paths, "left_semi").drop(
+            "_fp", "_pos"
         )
-        return out
 
     # ops that re-arrange bytes without changing table content: their
     # file diffs are pure noise to a change consumer
@@ -2154,40 +2105,18 @@ class TxTable:
                 # commit that (re-)adds DV-carrying files — restore()
                 # to a DV'd version — must not emit DV-dead rows as
                 # 'insert' (ADVICE r9: the feed would resurrect rows
-                # absent from read()).  _live_dvs keeps every DV-less
-                # step on the identity fast path.
+                # absent from read()).  _scan keeps every DV-less
+                # step on the bare-scan fast path.
                 ins_tag = (
                     "update_postimage"
                     if labels == "delta" and cur.op == "update_dv"
                     else "insert"
                 )
-                parts.append(
-                    tag(
-                        self._read_files(
-                            added,
-                            cur.schema_json,
-                            self._colmap_or_none(cur),
-                            dvs=self._dvs_of(cur),
-                        ),
-                        ins_tag,
-                        v,
-                    )
-                )
+                parts.append(tag(self._scan(cur, added), ins_tag, v))
             if removed:
                 # rows already dead under PREV's vectors were deleted
                 # in an earlier version — do not re-emit them
-                parts.append(
-                    tag(
-                        self._read_files(
-                            removed,
-                            prev.schema_json,
-                            self._colmap_or_none(prev),
-                            dvs=self._dvs_of(prev),
-                        ),
-                        "delete",
-                        v,
-                    )
-                )
+                parts.append(tag(self._scan(prev, removed), "delete", v))
             if prev is not None:
                 dv_rows = self._dv_new_rows(cur, prev)
                 if dv_rows is not None:
@@ -2285,23 +2214,11 @@ class TxTable:
         admit, then applies the exact predicate (skipping is a
         superset filter).  On a 100 TB time-keyed table this is the
         difference between scanning the table and scanning a day."""
-        snap = self.snapshot()
-        files = self.files_in_range(col, lo, hi)
-        if not files:
-            from pyspark.sql.types import StructType
-
-            schema = (
-                StructType.fromJson(json.loads(snap.schema_json))
-                if snap.schema_json
-                else self._read_files(list(snap.files), None).schema
-            )
-            return self.spark.createDataFrame([], schema)
-        df = self._read_files(
-            files,
-            snap.schema_json,
-            self._colmap_or_none(snap),
-            dvs=self._dvs_of(snap),
-        )
+        # ONE snapshot for both the pruning and the scan: a head
+        # re-read in between would scan a newer file list under this
+        # snapshot's vectors and resurrect rows a racing delete_dv hid
+        snap = self._head()
+        df = self._scan(snap, self.files_in_range(col, lo, hi, snap=snap))
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -2353,51 +2270,28 @@ class TxTable:
 
     # ---------------------------------------- copy-on-write mutations
 
-    def _scan_with_fp(
-        self,
-        files,
-        schema_json: str | None = None,
-        colmap: list[dict] | None = None,
-        dvs: dict | None = None,
-    ) -> DataFrame:
-        """Snapshot scan carrying each row's source file as a regular
-        column.  ``_metadata`` resolves only directly against the file
-        source, so it must be projected here, before any join/filter —
-        and, under a non-identity colmap, before the physical->logical
-        projection.  ``dvs`` subtracts deletion-vector rows, so a file
-        whose only predicate matches are already-deleted rows is never
-        reported affected."""
-        live = self._live_dvs(list(files), dvs)
-        if live:
-            return self._anti_dv(
-                self._scan_with_pos(files, schema_json, colmap), live
-            ).drop("_pos")
-        if schema_json is None or self._is_identity(colmap):
-            return self._read_files(files, schema_json).withColumn(
-                "_fp", F.col("_metadata.file_path")
-            )
-        from pyspark.sql.types import StructType
-
-        logical = StructType.fromJson(json.loads(schema_json))
-        raw = self._phys_read(files, logical, colmap).withColumn(
-            "_fp", F.col("_metadata.file_path")
-        )
-        return raw.select(
-            *self._logical_select(logical, colmap), F.col("_fp")
-        )
-
-    @staticmethod
-    def _affected_files(pred_df: DataFrame) -> list[str]:
-        """Distinct source files of ``pred_df``'s rows — metadata-sized
-        (a few paths), safe to collect on the driver.  file_path comes
-        back as a URI (``file:/x`` or ``file:///x``, %-encoded);
-        normalize to the plain paths the manifests store — without the
-        unquote, a partition dir with an escapable char (a space) would
-        yield paths matching NO manifest file and the rewrite would
-        silently skip its rows."""
+    def _affected(self, base: TxSnapshot, files, match) -> list[str]:
+        """The files among ``files`` holding a live row of
+        ``match(scan)`` (a filter or key semi-join over the snapshot
+        scan) — the affected-file search every copy-on-write mutation
+        shares.  No candidates: no scan, no job.  DV-deleted rows never
+        make a file affected.  The result is metadata-sized (a few
+        paths), safe to collect on the driver.  file_path comes back as
+        a URI (``file:/x`` or ``file:///x``, %-encoded); normalize to
+        the plain paths the manifests store — without the unquote, a
+        partition dir with an escapable char (a space) would yield
+        paths matching NO manifest file and the rewrite would silently
+        skip its rows."""
         from urllib.parse import unquote, urlparse
 
-        rows = pred_df.select("_fp").distinct().collect()
+        if not files:
+            return []
+        rows = (
+            match(self._scan(base, files, meta=("fp",)))
+            .select("_fp")
+            .distinct()
+            .collect()
+        )
         return sorted(unquote(urlparse(r._fp).path) for r in rows)
 
     @staticmethod
@@ -2556,15 +2450,7 @@ class TxTable:
             else candidates_of(base)
         )
         read_files = set(search) if candidates_of is not None else None
-        affected = (
-            self._affected_files(
-                self._scan_with_fp(
-                    search, base.schema_json, cm, dvs=self._dvs_of(base)
-                ).filter(where)
-            )
-            if search
-            else []
-        )
+        affected = self._affected(base, search, lambda d: d.filter(where))
         if not affected:
             self._commit_vs_appends(
                 base, op, set(), [], read_files=read_files
@@ -2575,9 +2461,7 @@ class TxTable:
         # it once and let the match count ride the first action via
         # ``observe`` (placed BELOW the transform, so a DELETE's
         # filtered-out matches are still counted).
-        hit = self._read_files(
-            affected, base.schema_json, cm, dvs=self._dvs_of(base)
-        ).persist()
+        hit = self._scan(base, affected).persist()
         try:
             obs = Observation()
             rewritten = transform(
@@ -2907,17 +2791,6 @@ class TxTable:
             if n.endswith(".parquet")
         )
 
-    def _matches_with_pos(self, base: TxSnapshot, where: Column) -> DataFrame:
-        """Live (not-already-deleted) rows matching ``where``, carrying
-        ``_fp``/``_pos`` row identity — the shared front half of the
-        merge-on-read mutations."""
-        cm = self._colmap_or_none(base)
-        scanned = self._scan_with_pos(list(base.files), base.schema_json, cm)
-        live = self._live_dvs(list(base.files), self._dvs_of(base))
-        if live:
-            scanned = self._anti_dv(scanned, live)
-        return scanned.filter(where)
-
     def _dv_commit(
         self,
         base: TxSnapshot,
@@ -2976,7 +2849,9 @@ class TxTable:
         already-deleted rows don't double-count, a zero-match call
         commits an empty-change version.  Returns rows deleted."""
         base = self._head()
-        matched = self._matches_with_pos(base, where).persist()
+        matched = (
+            self._scan(base, meta=("fp", "pos")).filter(where).persist()
+        )
         try:
             n = matched.count()
             if n == 0:
@@ -3004,7 +2879,9 @@ class TxTable:
         bad = sorted(set(set_map) - set(cols))
         if bad:
             raise ValueError(f"update_dv targets unknown columns {bad}")
-        matched = self._matches_with_pos(base, where).persist()
+        matched = (
+            self._scan(base, meta=("fp", "pos")).filter(where).persist()
+        )
         try:
             n = matched.count()
             if n == 0:
@@ -3051,20 +2928,12 @@ class TxTable:
         cm = self._colmap_or_none(base)
         keys = F.broadcast(batch.select(key).distinct())
         candidates = self._candidate_files_for_keys(base, batch, [key])
-        affected = (
-            self._affected_files(
-                self._scan_with_fp(
-                    candidates, base.schema_json, cm, dvs=self._dvs_of(base)
-                ).join(keys, key, "left_semi")
-            )
-            if candidates
-            else []
+        affected = self._affected(
+            base, candidates, lambda d: d.join(keys, key, "left_semi")
         )
         cdf = None
         if affected:
-            hit = self._read_files(
-                affected, base.schema_json, cm, dvs=self._dvs_of(base)
-            )
+            hit = self._scan(base, affected)
             kept = hit.join(keys, key, "left_anti")
             new_data = kept.unionByName(batch.select(*kept.columns))
             # exact CDF (r10): replaced rows are the semi-join of the
@@ -3149,8 +3018,6 @@ class TxTable:
         Mapping rules identical: identity tables stay identity unless
         a dropped name returns; otherwise fresh ids + safe physical
         names so old files can never resurrect retired values."""
-        import dataclasses
-
         schema = self._current_schema(base)
         needs_map = base.colmap is not None or any(
             c in base.dropped for c in new_cols
@@ -3321,39 +3188,17 @@ class TxTable:
         has_matched_clause = update is not None or delete_condition is not None
         bkeys = F.broadcast(src.select(*keys).distinct())
         candidates = self._candidate_files_for_keys(base, src, keys)
-        affected = (
-            self._affected_files(
-                self._scan_with_fp(
-                    candidates, base.schema_json, cm, dvs=self._dvs_of(base)
-                ).join(bkeys, keys, "left_semi")
-            )
-            if candidates
-            else []
+        affected = self._affected(
+            base, candidates, lambda d: d.join(bkeys, keys, "left_semi")
         )
         dv_mode = mode == "dv" and bool(affected)
         if mode not in ("cow", "dv"):
             raise ValueError(f"merge mode must be 'cow' or 'dv', got {mode!r}")
-        if dv_mode and ({"_fp", "_pos"} & set(cols)):
-            raise ValueError(
-                "merge mode='dv' reserves the _fp/_pos column names"
-            )
-        if dv_mode:
-            # carry row identity through the clause join so fired
-            # targets can be deletion-vectored instead of rewritten
-            hit = self._scan_with_pos(affected, base.schema_json, cm)
-            live = self._live_dvs(affected, self._dvs_of(base))
-            if live:
-                hit = self._anti_dv(hit, live)
-        elif affected:
-            hit = self._read_files(
-                affected, base.schema_json, cm, dvs=self._dvs_of(base)
-            )
-        else:
-            from pyspark.sql.types import StructType
-
-            hit = self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(base.schema_json))
-            )
+        # dv mode carries row identity through the clause join so fired
+        # targets can be deletion-vectored instead of rewritten
+        hit = self._scan(
+            base, affected, meta=("fp", "pos") if dv_mode else ()
+        )
         tm, sm = "_t_marker", "_s_marker"
         while tm in cols or tm in extra:  # user column shaped like ours
             tm = "_" + tm
@@ -3642,15 +3487,7 @@ class TxTable:
         self._validate_constraints(df, base, "replace_where")
         cm = self._colmap_or_none(base)
         search = base.files if candidates is None else candidates
-        affected = (
-            self._affected_files(
-                self._scan_with_fp(
-                    search, base.schema_json, cm, dvs=self._dvs_of(base)
-                ).filter(pred)
-            )
-            if search
-            else []
-        )
+        affected = self._affected(base, search, lambda d: d.filter(pred))
         cdf = None
         hit = None
         try:
@@ -3660,9 +3497,7 @@ class TxTable:
                 # the kept-rows rewrite) — persist it once and let the
                 # count ride the rewrite job via ``observe`` (below the
                 # kept-filter, so filtered-out matches still count).
-                hit = self._read_files(
-                    affected, base.schema_json, cm, dvs=self._dvs_of(base)
-                ).persist()
+                hit = self._scan(base, affected).persist()
                 obs = Observation()
                 kept = hit.observe(
                     obs, F.count(F.when(pred, 1)).alias("n")
@@ -4006,8 +3841,7 @@ class TxTable:
         if base is None:
             raise FileNotFoundError(f"no committed version under {self.root}")
         if not base.files:
-            # trivial-table guard (ADVICE r4): nothing to rewrite, and
-            # _read_files([]) would raise on a pathless scan
+            # trivial-table guard (ADVICE r4): nothing to rewrite
             return base.version
         cm = self._colmap_or_none(base)
         scope = list(base.files)
@@ -4021,9 +3855,7 @@ class TxTable:
         if cluster_by:
             total = sum(os.path.getsize(f) for f in scope)
             n_out = max(1, -(-total // target_bytes))  # ceil
-            full = self._read_files(
-                scope, base.schema_json, cm, dvs=self._dvs_of(base)
-            )
+            full = self._scan(base, scope)
             if zorder and len(cluster_by) >= 2:
                 keyed = full.withColumn(
                     "_zk", self._zorder_key(full, cluster_by)
@@ -4049,9 +3881,7 @@ class TxTable:
                 return base.version  # nothing to coalesce
             total = sum(os.path.getsize(f) for f in small)
             n_out = max(1, -(-total // target_bytes))  # ceil
-            packed = self._read_files(
-                small, base.schema_json, cm, dvs=self._dvs_of(base)
-            )
+            packed = self._scan(base, small)
             spec = self._partition_spec(base)
             if spec is None or (
                 partition is not None and set(partition) == set(spec)
@@ -4130,9 +3960,7 @@ class TxTable:
         if not affected:
             return base.version
         cm = self._colmap_or_none(base)
-        rewritten = self._read_files(
-            affected, base.schema_json, cm, dvs=dvs
-        )
+        rewritten = self._scan(base, affected)
         new = self._write_data(rewritten, cm)
         # purge reads only the files it rewrites — a racer touching
         # OTHER files rebases cleanly (disjoint-rewrite admission)

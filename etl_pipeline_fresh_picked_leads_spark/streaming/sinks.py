@@ -12,8 +12,7 @@ Two backends:
   so a crash mid-batch leaves the previous snapshot intact and the
   foreachBatch replay simply redoes the batch.  This is the 100 TB
   shape: per-trigger cost is O(batch + files-hit-by-batch-keys), not
-  O(table).  With delta-spark on the classpath the same contract is
-  ``DeltaTable.merge`` (txtable.delta_available is the seam).
+  O(table) — the contract of ``DeltaTable.merge``.
 - ``transactional=False``: plain parquet directory,
   read-union-dedup-rewrite.  O(table) per trigger, and the overwrite
   is staged + renamed so the previous table survives a crash up to the

@@ -20,7 +20,6 @@ from etl_pipeline_fresh_picked_leads_spark.sources.maintenance import (
 from etl_pipeline_fresh_picked_leads_spark.sources.txtable import (
     TxConflictError,
     TxTable,
-    delta_available,
 )
 
 
@@ -146,15 +145,6 @@ def test_tx_ingestion_date_backfill(spark, tmp_path):
     }
     # idempotent: second run touches nothing
     assert set_ingestion_date_where_null_tx(spark, root, date(2025, 6, 2)) == 0
-
-
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_backend_available():
-    """Placeholder for the Delta seam: when delta-spark is on the
-    classpath, maintenance/sinks route through DeltaTable.update/merge
-    (txtable.delta_available()).  This environment ships without the
-    jars, so the routing is exercised only via TxTable."""
-    assert delta_available()
 
 
 def test_compact_coalesces_small_files(spark, tmp_path):

@@ -93,7 +93,7 @@ def test_compact_materializes_and_vacuum_gcs_superseded(spark, tmp_path):
     assert t.read().count() == 90
 
 
-def test_vacuum_never_gcs_live_dvs(spark, tmp_path):
+def test_vacuum_never_gcs_referenced_dvs(spark, tmp_path):
     root = str(tmp_path / "t")
     t = TxTable.create(spark, root, _df(spark).coalesce(2))
     t.delete_dv(F.col("k") == 50)
@@ -498,10 +498,12 @@ def test_read_changes_restore_applies_dvs_to_added_files(spark, tmp_path):
     assert 100 in dels
 
 
-def test_scan_with_pos_reserved_names_guard(spark, tmp_path):
-    """ADVICE r9 (low): _fp/_pos are reserved on EVERY DV path, not
-    just merge(mode='dv') — delete_dv on a table whose schema contains
-    either name must refuse instead of silently dropping the column."""
+def test_scan_reserved_names_guard(spark, tmp_path):
+    """ADVICE r9 (low): _fp/_pos are reserved on EVERY scan that
+    projects them, not just merge(mode='dv') — delete_dv on a table
+    whose schema contains either name must refuse instead of silently
+    dropping the column, and the copy-on-write affected-file search
+    (which projects _fp) refuses an _fp column."""
     root = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(1, "a")], "k bigint, _pos string"
@@ -509,11 +511,51 @@ def test_scan_with_pos_reserved_names_guard(spark, tmp_path):
     t = TxTable.create(spark, root, df.coalesce(1))
     with pytest.raises(ValueError, match="_fp/_pos"):
         t.delete_dv(F.col("k") == 1)
+    # a CoW update projects only _fp: the _pos column is not in its way
+    assert t.update(F.col("k") == 1, {"_pos": F.lit("b")}) == 1
+    assert [r._pos for r in t.read().collect()] == ["b"]
+    fp = TxTable.create(
+        spark,
+        str(tmp_path / "f"),
+        spark.createDataFrame([(1, "a")], "k bigint, _fp string"),
+    )
+    with pytest.raises(ValueError, match="_fp/_pos"):
+        fp.update(F.col("k") == 1, {"_fp": F.lit("b")})
     # a clean table is unaffected
     t2 = TxTable.create(
         spark, str(tmp_path / "u"), _df(spark, 5).coalesce(1)
     )
     assert t2.delete_dv(F.col("k") == 0) == 1
+
+
+def test_read_range_scans_one_snapshot(spark, tmp_path, monkeypatch):
+    """read_range prunes and scans the SAME snapshot.  A head re-read
+    between the two would scan the newer file list under the older
+    snapshot's vectors: rows a racer appended and then delete_dv'd
+    would come back."""
+    root = str(tmp_path / "t")
+    t = TxTable.create(spark, root, _df(spark, 10).coalesce(1))
+    racer = TxTable(spark, root)
+    real = TxTable.snapshot
+    raced = []
+
+    def snapshot(self, version=None):
+        snap = real(self, version)
+        if self is t and version is None and not raced:
+            raced.append(True)  # land two commits after t's head read
+            racer.append(
+                _df(spark, 110).filter(F.col("k") >= 100).coalesce(1)
+            )
+            racer.delete_dv((F.col("k") >= 100) & (F.col("k") < 105))
+        return snap
+
+    monkeypatch.setattr(TxTable, "snapshot", snapshot)
+    got = sorted(r.k for r in t.read_range("k", 0, 200).collect())
+    monkeypatch.undo()
+    assert raced
+    assert got == list(range(10)), got
+    head = sorted(r.k for r in t.read_range("k", 0, 200).collect())
+    assert head == [*range(10), *range(105, 110)], head
 
 
 def test_read_changes_since_zero_vacuumed_log(spark, tmp_path):

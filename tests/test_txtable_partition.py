@@ -669,10 +669,7 @@ def test_native_sink_split_vectorized_exactness(tmp_path):
         str(tmp_path / "a"), schema, iter([batch]), partition_by=["p"]
     )
     segs = sorted(f.split("/")[-2] for f in wf.files)
-    assert segs == [f"__txp_p={big}", f"__txp_p={big}", f"__txp_p={big+1}"] or (
-        len(wf.files) == 2
-        and segs == [f"__txp_p={big}", f"__txp_p={big+1}"]
-    )
+    assert segs == [f"__txp_p={big}", f"__txp_p={big+1}"]
     by_seg = {}
     for f in wf.files:
         by_seg[f.split("/")[-2]] = pq.read_table(f)
