@@ -60,6 +60,8 @@ import json
 import os
 import time
 import uuid
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -173,6 +175,17 @@ class TxSnapshot:
 
 def _manifest_name(version: int) -> str:
     return f"v{version:010d}.json"
+
+
+class _Effect(NamedTuple):
+    """What one mutation does to the rows it hit (see ``_mutate``)."""
+
+    rewrite: DataFrame | None = None  # replaces the affected files
+    changed: DataFrame | None = None  # rows of rewrite this changed
+    insert: DataFrame | None = None  # rows added beside them
+    cdf: DataFrame | None = None  # exact changes, + _change_type
+    dv: DataFrame | None = None  # (_fp, _pos) rows to deletion-vector
+    op: str | None = None  # manifest op, when not the mutation's own
 
 
 class TxTable:
@@ -426,7 +439,7 @@ class TxTable:
     # ``_scan`` meta key -> (_metadata field, column name, type)
     _META = {
         "fp": ("file_path", "_fp", "string"),
-        "pos": ("row_index", "_pos", "bigint"),
+        "pos": ("row_index", "_pos", "long"),
     }
 
     def _scan(
@@ -732,12 +745,14 @@ class TxTable:
         df: DataFrame,
         colmap: list[dict] | None = None,
         arrange: bool = True,
+        base: "TxSnapshot | None" = None,
     ) -> list[str]:
         """Materialize ``df`` (LOGICAL column names) as a fresh
         immutable commit directory; returns the part-file paths
         (never mutated afterwards).  A non-identity ``colmap`` renames
         to physical columns first so every data file of the table
-        speaks physical names.
+        speaks physical names.  ``base`` supplies the partition spec
+        (default: the handle's cached or head spec).
 
         On a PARTITIONED table every write path lands here, so the
         file-per-partition-value invariant is enforced in one place:
@@ -759,8 +774,7 @@ class TxTable:
             df = df.select(
                 *[F.col(c).alias(phys.get(c, c)) for c in df.columns]
             )
-        out = os.path.join(self.data_dir, uuid.uuid4().hex)
-        pby = self._partition_spec()
+        pby = self._partition_spec(base)
         if pby:
             pmap = (
                 {c["name"]: c["phys"] for c in colmap}
@@ -783,17 +797,19 @@ class TxTable:
                     self.spark.sparkContext.defaultParallelism,
                     *[F.col(c) for c in pphys],
                 )
-            split.write.mode("error").partitionBy(*tmp).parquet(out)
-            return sorted(
-                os.path.join(dp, n)
-                for dp, _dirs, names in os.walk(out)
-                for n in names
-                if n.endswith(".parquet")
-            )
-        df.write.mode("error").parquet(out)
+            return self._write_dir(split.write.partitionBy(*tmp))
+        return self._write_dir(df.write)
+
+    def _write_dir(self, writer) -> list[str]:
+        """Run ``writer`` into a fresh immutable commit directory under
+        ``data/``; returns its parquet part paths (partition
+        subdirectories included)."""
+        out = os.path.join(self.data_dir, uuid.uuid4().hex)
+        writer.mode("error").parquet(out)
         return sorted(
-            os.path.join(out, n)
-            for n in os.listdir(out)
+            os.path.join(dp, n)
+            for dp, _dirs, names in os.walk(out)
+            for n in names
             if n.endswith(".parquet")
         )
 
@@ -892,15 +908,14 @@ class TxTable:
                 )
             )
 
+    @staticmethod
     def _refuse_generated_targets(
-        self, set_map: dict, op: str, base: "TxSnapshot | None" = None
+        set_map: dict, op: str, base: TxSnapshot
     ) -> None:
         """UPDATE may not SET a generated column directly (Delta
         refuses too — its value is the expression's business); updates
         of the expression's INPUTS are validated post-rewrite."""
-        if base is None:
-            base = self.snapshot()
-        hit = sorted(set(set_map) & set((base.generated or {}) if base else {}))
+        hit = sorted(set(set_map) & set(base.generated or {}))
         if hit:
             raise ValueError(
                 f"{op} cannot set generated column(s) {hit}; their "
@@ -931,11 +946,11 @@ class TxTable:
 
     def _apply_generated(self, df: DataFrame, gen: dict | None, op: str):
         """Generated-column write contract (r10, Delta generation
-        expressions): compute each generated column the write OMITTED,
-        then validate every one it PROVIDED — value must equal the
-        expression row-for-row (NULL-safe), else the write raises and
-        commits nothing.  One added projection + one aggregate pass,
-        cost ∝ the commit."""
+        expressions): compute each generated column the write OMITTED;
+        ``_validate_generated`` then checks every one it PROVIDED —
+        value must equal the expression row-for-row (NULL-safe), else
+        the write raises and commits nothing.  One added projection +
+        one aggregate pass, cost ∝ the commit."""
         if not gen:
             return df
         try:
@@ -947,7 +962,6 @@ class TxTable:
                 f"{op} schema cannot compute generated column(s) "
                 f"{sorted(gen)}: {exc.__class__.__name__}"
             ) from None
-        self._validate_generated(df, gen, op)
         return df
 
     @staticmethod
@@ -1383,6 +1397,7 @@ class TxTable:
         idn = self._identity_of(base)
         self._refuse_identity_col(df, idn, "overwrite")
         df = self._apply_generated(df, gen, "overwrite")
+        self._validate_generated(df, gen, "overwrite")
         pin = None
         assigned_from = None
         try:
@@ -1394,7 +1409,7 @@ class TxTable:
                 df, idn["next"], pin = self._assign_identity(df, idn)
             self._validate_constraints(df, base, "overwrite")
             cm, retired, max_id = self._overwrite_colmap(base, df.columns)
-            new = self._write_data(df, cm)
+            new = self._write_data(df, cm, base=base)
         finally:  # a failed check or write must not leak the pin
             if pin is not None:
                 pin.unpersist()
@@ -1491,6 +1506,7 @@ class TxTable:
         idn = self._identity_of(base)
         self._refuse_identity_col(df, idn, "append")
         df = self._apply_generated(df, self._gen_of(base), "append")
+        self._validate_generated(df, self._gen_of(base), "append")
         if idn is None:
             self._check_columns(df, base, "append")
         if txn is not None and txn in self._committed_txns():
@@ -1508,13 +1524,16 @@ class TxTable:
                 assigned_from = idn["next"]
                 df, idn["next"], pin = self._assign_identity(df, idn)
                 self._check_columns(df, base, "append")
+            # manifest types, after identity assignment: a widened
+            # incoming type must not land a file later reads choke on
+            df = self._conform_types(df, base)
             # AFTER the idempotency check: a replayed batch must no-op
             # even if a constraint added since its first commit would
             # now reject it (has_txn's exactly-once contract; also
             # skips a wasted scan)
             self._validate_constraints(df, base, "append")
             cm = self._colmap_or_none(base)
-            new = self._write_data(df, cm)
+            new = self._write_data(df, cm, base=base)
         finally:  # a failed check or write must not leak the pin
             if pin is not None:
                 pin.unpersist()
@@ -2270,29 +2289,29 @@ class TxTable:
 
     # ---------------------------------------- copy-on-write mutations
 
-    def _affected(self, base: TxSnapshot, files, match) -> list[str]:
-        """The files among ``files`` holding a live row of
-        ``match(scan)`` (a filter or key semi-join over the snapshot
-        scan) — the affected-file search every copy-on-write mutation
-        shares.  No candidates: no scan, no job.  DV-deleted rows never
-        make a file affected.  The result is metadata-sized (a few
-        paths), safe to collect on the driver.  file_path comes back as
-        a URI (``file:/x`` or ``file:///x``, %-encoded); normalize to
-        the plain paths the manifests store — without the unquote, a
-        partition dir with an escapable char (a space) would yield
-        paths matching NO manifest file and the rewrite would silently
-        skip its rows."""
+    def _affected(self, base: TxSnapshot, files, match) -> dict:
+        """``{file: live rows}`` for the files among ``files`` holding a
+        live row of ``match(scan)`` (a filter or key semi-join over the
+        snapshot scan) — the affected-file search of every mutation, and
+        its match count.  No candidates: no scan, no job.  DV-deleted
+        rows never make a file affected.  The result is metadata-sized
+        (a few paths), safe to collect on the driver.  file_path comes
+        back as a URI (``file:/x`` or ``file:///x``, %-encoded);
+        normalize to the plain paths the manifests store — without the
+        unquote, a partition dir with an escapable char (a space) would
+        yield paths matching NO manifest file and the rewrite would
+        silently skip its rows."""
         from urllib.parse import unquote, urlparse
 
         if not files:
-            return []
+            return {}
         rows = (
             match(self._scan(base, files, meta=("fp",)))
-            .select("_fp")
-            .distinct()
+            .groupBy("_fp")
+            .count()
             .collect()
         )
-        return sorted(unquote(urlparse(r._fp).path) for r in rows)
+        return {unquote(urlparse(r._fp).path): r["count"] for r in rows}
 
     @staticmethod
     def _rebaseable_between(
@@ -2347,17 +2366,19 @@ class TxTable:
         }
         return not (dv_changed & read_files)
 
+    # lost-race rebases a mutation commit attempts before raising
+    _COMMIT_RETRIES = 5
+
     def _commit_vs_appends(
         self,
         base: TxSnapshot,
         op: str,
         affected: set,
         new: list[str],
-        txn: str | None = None,
-        dv_delta: dict | None = None,
-        max_retries: int = 5,
-        cdf: list[str] | None = None,
-        read_files: "set[str] | None" = None,
+        txn: str | None,
+        dv_delta: dict | None,
+        cdf: list[str] | None,
+        read_files: "set[str] | None",
     ) -> int:
         """Commit a snapshot-derived mutation (survivors = base.files
         minus ``affected``, plus ``new``), auto-resolving lost races
@@ -2376,7 +2397,7 @@ class TxTable:
         upsert/merge would have claimed (duplicate keys) —
         WriteSerializable, not Serializable."""
         cm = self._colmap_or_none(base)
-        for attempt in range(max_retries + 1):
+        for attempt in range(self._COMMIT_RETRIES + 1):
             survivors = [f for f in base.files if f not in affected]
             dvs = None
             if dv_delta is not None:
@@ -2398,104 +2419,121 @@ class TxTable:
                 nb = self.snapshot()
                 if txn is not None and txn in self._committed_txns():
                     return nb.version  # our twin's replay landed it
-                if attempt == max_retries or not self._rebaseable_between(
-                    base, nb, read_files
+                if (
+                    attempt == self._COMMIT_RETRIES
+                    or not self._rebaseable_between(base, nb, read_files)
                 ):
                     raise
                 base = nb
 
-    def _rewrite_affected(
+    def _mutate(
         self,
-        where: Column,
+        base: TxSnapshot,
         op: str,
-        transform,
-        validate: bool = False,
-        post_of=None,
-        candidates_of=None,
-    ) -> int:
-        """File-granular copy-on-write scaffold shared by
-        UPDATE/DELETE: find the files containing ``where`` matches,
-        rewrite them through ``transform(hit_df)``, carry everything
-        else by reference.  A no-match predicate commits an
-        EMPTY-CHANGE version (same file list) — Delta parity, so every
-        mutation call advances the version counter and callers'
-        ``restore(v)`` / ``history()`` arithmetic stays predictable
-        regardless of whether the predicate matched (VERDICT r7 item 1;
-        Delta Lake commits an empty transaction here for the same
-        reason).  Returns the number of matching rows.
+        files: "list[str] | None",
+        match,
+        effect,
+        meta: tuple = (),
+        txn: str | None = None,
+    ) -> tuple:
+        """THE executor of snapshot-derived mutations: every update,
+        delete, DV mutation, upsert, merge, replace and purge commits
+        here, so each gets the same scan, validation, sidecars and
+        commit.  Returns ``(version, n)``, ``n`` the live rows the
+        match found.
 
-        Concurrency (r9 conflict matrix, widened r10): a lost race
-        against PURE-APPEND commits auto-resolves — the appended files
-        join the survivor list, nothing recomputes
-        (``_commit_vs_appends``).  With ``candidates_of`` (a callable
-        base -> stats-pruned file list, the range forms) the mutation
-        also declares its READ SET, so racers that rewrote only files
-        outside it rebase too (``_rebaseable_between``).  Any other
-        interleaving raises TxConflictError: the survivor list derives
-        FROM the snapshot, so a safe retry would have to redo the
-        affected-file scan against the new base — callers re-invoke.
+        - Read set: ``files`` (the stats-pruned candidates), or None
+          for a whole-table read.  It is also the ``read_files`` the
+          commit declares for disjoint-writer admission.
+        - Match: ``match(scan)`` filters or key-semi-joins the
+          snapshot scan to find the affected files (``_affected``);
+          None = every file of ``files`` is affected (purge).
+        - Effect: ``effect(hit, n)`` gets the affected files' rows
+          (their ``_scan`` under ``meta``) and ``n``, the live rows
+          the match found, and returns an ``_Effect``: ``rewrite``
+          replaces the affected files (copy-on-write) and ``changed``
+          names its rows the mutation changed, ``insert`` adds rows
+          beside them, ``cdf`` is the exact changeset and ``dv`` the
+          ``(_fp, _pos)`` rows to deletion-vector.  With nothing
+          affected only ``insert`` can land; with nothing to write
+          either, the mutation commits an EMPTY-CHANGE version before
+          any validation (Delta parity: every mutation call advances
+          the version, so ``restore``/``history`` arithmetic never
+          depends on whether rows matched).
 
-        Exact CDF (r10): when rows matched, the commit carries a
-        ``_cdf`` sidecar naming the exact preimages (tag 'delete') and
-        — via ``post_of(matched)``, UPDATE's transformed images — the
-        exact postimages (tag 'insert'), so ``read_changes`` never
-        re-emits the rewritten files' carried-along rows."""
-        base = self.snapshot()
-        if base is None:
-            raise FileNotFoundError(f"no committed version under {self.root}")
-        cm = self._colmap_or_none(base)
-        search = (
-            list(base.files)
-            if candidates_of is None
-            else candidates_of(base)
+        Every frame written is conformed to the manifest types (ANSI
+        casts — a type-drifting expression fails its own write, never
+        poisons later reads).  ``changed`` and ``insert`` — the only
+        rows that can break a CHECK constraint or generation
+        expression; kept rows passed at their own commit — are gated
+        by both before anything is written.  Data files take the
+        snapshot's colmap; the CDF sidecar is sized to the affected
+        file count; DV sidecar keys are the URI-decoded file paths the
+        manifest stores (sidecar ``file`` values stay encoded — every
+        read-side join compares them against ``_norm_fp``); the commit
+        retries per ``_commit_vs_appends``.
+
+        The hit is NOT cached: under AQE a cached frame's first use is
+        its own materialization job, and on update/delete/replace/DV
+        it saved none — upsert, merge and purge measured +1 to +3 jobs
+        with it (tests/test_job_counts.py), and update_dv ran slower
+        caching whole affected files.  An effect that reuses a frame
+        many times (merge's clause join) persists that frame itself."""
+        from urllib.parse import unquote
+
+        search = list(base.files) if files is None else files
+        found = (
+            dict.fromkeys(search, 0)
+            if match is None
+            else self._affected(base, search, match)
         )
-        read_files = set(search) if candidates_of is not None else None
-        affected = self._affected(base, search, lambda d: d.filter(where))
-        if not affected:
-            self._commit_vs_appends(
-                base, op, set(), [], read_files=read_files
+        affected = sorted(found)
+        n = sum(found.values())
+        fx = effect(self._scan(base, affected, meta), n)
+        if not affected:  # nothing to rewrite, change-log or vector
+            fx = _Effect(insert=fx.insert, op=fx.op)
+
+        def union(*parts):
+            parts = [p for p in parts if p is not None]
+            return reduce(DataFrame.unionByName, parts) if parts else None
+
+        new = []
+        check = union(fx.changed, fx.insert)
+        if check is not None:
+            check = self._conform_types(check, base)
+            self._validate_constraints(check, base, op)
+            self._validate_generated(check, self._gen_of(base), op)
+        out = union(fx.rewrite, fx.insert)
+        if out is not None:
+            out = self._conform_types(out, base)
+            new = self._write_data(out, self._colmap_or_none(base), base=base)
+        cdf = dv_delta = None
+        if fx.cdf is not None:
+            changes = self._conform_types(
+                fx.cdf, base, passthrough=("_change_type",)
             )
-            return 0
-        # r15 (guide §1.4/§5): the affected slice used to be re-scanned
-        # four times (match count, validation, rewrite, CDF) — persist
-        # it once and let the match count ride the first action via
-        # ``observe`` (placed BELOW the transform, so a DELETE's
-        # filtered-out matches are still counted).
-        hit = self._scan(base, affected).persist()
-        try:
-            obs = Observation()
-            rewritten = transform(
-                hit.observe(obs, F.count(F.when(where, 1)).alias("n"))
+            cdf = self._write_cdf(changes, parts=len(affected))
+        if fx.dv is not None:
+            seen = Observation()  # the vectored files, free on the write
+            paths = self._write_dv(
+                fx.dv.select(
+                    self._norm_fp().alias("file"), F.col("_pos").alias("pos")
+                ).observe(seen, F.collect_set("file").alias("files"))
             )
-            if validate:  # UPDATE can move rows INTO violation;
-                # DELETE can't
-                self._validate_constraints(rewritten, base, op)
-                # an update of a generation INPUT must keep the
-                # generated column consistent (stricter than Delta's
-                # recompute: callers update both; documented)
-                self._validate_generated(
-                    rewritten, self._gen_of(base), op
-                )
-            new = self._write_data(rewritten, cm)
-            n = int(obs.get["n"] or 0)
-            cdf = None
-            if n > 0:
-                matched = hit.filter(where)
-                pre_tag = "delete" if post_of is None else "update_preimage"
-                changes = matched.withColumn("_change_type", F.lit(pre_tag))
-                if post_of is not None:
-                    changes = changes.unionByName(
-                        post_of(matched).withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-                cdf = self._write_cdf(changes, parts=len(affected))
-            self._commit_vs_appends(
-                base, op, set(affected), new, cdf=cdf, read_files=read_files
-            )
-        finally:
-            hit.unpersist()
-        return n
+            # a DELTA, not the composed dict: the commit re-applies it
+            # over each retry base's vectors
+            dv_delta = {unquote(f): list(paths) for f in seen.get["files"]}
+        version = self._commit_vs_appends(
+            base,
+            fx.op or op,
+            set(affected) if fx.rewrite is not None else set(),
+            new,
+            txn,
+            dv_delta,
+            cdf,
+            None if files is None else set(files),
+        )
+        return version, n
 
     @staticmethod
     def _predicate_bounds(where: Column) -> dict:
@@ -2609,10 +2647,10 @@ class TxTable:
         except Exception:
             return {}  # analysis is an optimization, never a gate
 
-    def _pruned_candidates_of(self, where: Column):
-        """``candidates_of`` for update/delete (r11, VERDICT r10 #5):
-        when the predicate implies interval bounds on stats columns,
-        the affected-file search opens only the admitted files AND the
+    def _pruned_files(self, base: TxSnapshot, where: Column):
+        """The read set of update/delete (r11, VERDICT r10 #5): when
+        the predicate implies interval bounds on stats columns, the
+        affected-file search opens only the admitted files AND the
         mutation declares that set as its read set — so
         ``UPDATE WHERE date = X`` on a date-clustered table composes
         with concurrent rewrites of other slices, exactly like
@@ -2621,55 +2659,79 @@ class TxTable:
         bounds = self._predicate_bounds(where)
         if not bounds:
             return None
+        cols = set(base.stats_cols or self.stats_cols or ())
+        cand: "set[str] | None" = None
+        for c, (lo, hi) in bounds.items():
+            if c not in cols or (lo is None and hi is None):
+                continue
+            try:
+                fs = set(self.files_in_range(c, lo, hi, snap=base))
+            except TypeError:
+                continue  # bound/stat representation mismatch
+            cand = fs if cand is None else cand & fs
+        # nothing stats-prunable: the read set is the whole table
+        # (same admission behavior as read_files=None)
+        return sorted(cand) if cand is not None else list(base.files)
 
-        def candidates(base: "TxSnapshot"):
-            cols = set(base.stats_cols or self.stats_cols or ())
-            cand: "set[str] | None" = None
-            for c, (lo, hi) in bounds.items():
-                if c not in cols or (lo is None and hi is None):
-                    continue
-                try:
-                    fs = set(self.files_in_range(c, lo, hi, snap=base))
-                except TypeError:
-                    continue  # bound/stat representation mismatch
-                cand = fs if cand is None else cand & fs
-            # nothing stats-prunable: the read set is the whole table
-            # (same admission behavior as read_files=None)
-            return sorted(cand) if cand is not None else list(base.files)
+    @staticmethod
+    def _update_effect(where: Column, set_map: dict[str, Column]):
+        """UPDATE's effect: matched rows take ``set_map``, the rest of
+        each affected file is rewritten unchanged; the exact CDF pairs
+        each matched row's preimage with its postimage."""
 
-        return candidates
+        def transform(df: DataFrame) -> DataFrame:
+            for col_name, value in set_map.items():
+                df = df.withColumn(
+                    col_name, F.when(where, value).otherwise(F.col(col_name))
+                )
+            return df
+
+        def effect(hit: DataFrame, n: int) -> _Effect:
+            matched = hit.filter(where)
+            post = transform(matched)
+            return _Effect(
+                rewrite=transform(hit),
+                changed=post,
+                cdf=matched.withColumn(
+                    "_change_type", F.lit("update_preimage")
+                ).unionByName(
+                    post.withColumn("_change_type", F.lit("update_postimage"))
+                ),
+            )
+
+        return effect
+
+    @staticmethod
+    def _delete_effect(where: Column):
+        """DELETE's effect: each affected file keeps its rows whose
+        predicate is not TRUE (SQL semantics: NULL survives); the exact
+        CDF names the deleted rows."""
+        return lambda hit, n: _Effect(
+            rewrite=hit.filter(~where.eqNullSafe(F.lit(True))),
+            cdf=hit.filter(where).withColumn("_change_type", F.lit("delete")),
+        )
 
     def update(self, where: Column, set_map: dict[str, Column]) -> int:
         """``UPDATE <table> SET ... WHERE ...`` as file-granular
         copy-on-write: only files containing matching rows are
         rewritten; everything else carries over by reference.  A
         zero-match update still commits an empty-change version
-        (Delta parity — see ``_rewrite_affected``).  r11: a predicate
-        with derivable interval bounds on a stats column prunes the
+        (Delta parity — see ``_mutate``).  r11: a predicate with
+        derivable interval bounds on a stats column prunes the
         affected-file search via the manifest AND declares the pruned
-        read set (disjoint-writer admission — see
-        ``_pruned_candidates_of``); opaque predicates keep the
-        whole-table-read contract.  Returns the number of rows
-        updated."""
-
-        self._refuse_generated_targets(set_map, "update")
-        self._refuse_identity_set(set_map, "update", self.snapshot())
-
-        def transform(hit: DataFrame) -> DataFrame:
-            for col_name, value in set_map.items():
-                hit = hit.withColumn(
-                    col_name, F.when(where, value).otherwise(F.col(col_name))
-                )
-            return hit
-
-        return self._rewrite_affected(
-            where,
+        read set (disjoint-writer admission — see ``_pruned_files``);
+        opaque predicates keep the whole-table-read contract.  Returns
+        the number of rows updated."""
+        base = self._head()
+        self._refuse_generated_targets(set_map, "update", base)
+        self._refuse_identity_set(set_map, "update", base)
+        return self._mutate(
+            base,
             "update",
-            transform,
-            validate=True,
-            post_of=transform,
-            candidates_of=self._pruned_candidates_of(where),
-        )
+            self._pruned_files(base, where),
+            lambda d: d.filter(where),
+            self._update_effect(where, set_map),
+        )[1]
 
     def delete(self, where: Column) -> int:
         """``DELETE FROM <table> WHERE ...`` as file-granular
@@ -2678,16 +2740,18 @@ class TxTable:
         selective delete rewrites a handful of files, never the
         table.  SQL DELETE semantics: a NULL-predicate row is NOT
         deleted.  A zero-match delete still commits an empty-change
-        version (Delta parity — see ``_rewrite_affected``).  r11:
+        version (Delta parity — see ``_mutate``).  r11:
         stats-derivable predicates prune the search and declare the
         read set, like ``update`` above.  Returns the number of rows
         deleted."""
-        return self._rewrite_affected(
-            where,
+        base = self._head()
+        return self._mutate(
+            base,
             "delete",
-            lambda hit: hit.filter(~where.eqNullSafe(F.lit(True))),
-            candidates_of=self._pruned_candidates_of(where),
-        )
+            self._pruned_files(base, where),
+            lambda d: d.filter(where),
+            self._delete_effect(where),
+        )[1]
 
     @staticmethod
     def _range_pred(col: str, lo, hi) -> Column:
@@ -2711,16 +2775,15 @@ class TxTable:
         (``_rebaseable_between``) — the concurrent-retention-job
         shape; the generic ``delete`` scans every file and stays
         conservative."""
-        return self._rewrite_affected(
-            self._range_pred(col, lo, hi),
+        where = self._range_pred(col, lo, hi)
+        base = self._head()
+        return self._mutate(
+            base,
             "delete",
-            lambda hit: hit.filter(
-                ~self._range_pred(col, lo, hi).eqNullSafe(F.lit(True))
-            ),
-            candidates_of=lambda base: self.files_in_range(
-                col, lo, hi, snap=base
-            ),
-        )
+            self.files_in_range(col, lo, hi, snap=base),
+            lambda d: d.filter(where),
+            self._delete_effect(where),
+        )[1]
 
     def update_range(
         self, col: str, lo, hi, set_map: dict[str, Column]
@@ -2730,40 +2793,25 @@ class TxTable:
         ``delete_range``.  CHECK constraints gate the rewritten
         rows."""
         where = self._range_pred(col, lo, hi)
-        self._refuse_generated_targets(set_map, "update_range")
-        self._refuse_identity_set(set_map, "update_range", self.snapshot())
-
-        def transform(hit: DataFrame) -> DataFrame:
-            for col_name, value in set_map.items():
-                hit = hit.withColumn(
-                    col_name,
-                    F.when(where, value).otherwise(F.col(col_name)),
-                )
-            return hit
-
-        return self._rewrite_affected(
-            where,
+        base = self._head()
+        self._refuse_generated_targets(set_map, "update_range", base)
+        self._refuse_identity_set(set_map, "update_range", base)
+        return self._mutate(
+            base,
             "update",
-            transform,
-            validate=True,
-            post_of=transform,
-            candidates_of=lambda base: self.files_in_range(
-                col, lo, hi, snap=base
-            ),
-        )
+            self.files_in_range(col, lo, hi, snap=base),
+            lambda d: d.filter(where),
+            self._update_effect(where, set_map),
+        )[1]
 
     def _write_dv(self, dv_df: DataFrame) -> list[str]:
         """Materialize a (file, pos) frame as an immutable DV sidecar
         commit directory; returns its parquet part paths."""
-        out = os.path.join(self.data_dir, uuid.uuid4().hex)
-        dv_df.select(
-            F.col("file").cast("string").alias("file"),
-            F.col("pos").cast("bigint").alias("pos"),
-        ).write.mode("error").parquet(out)
-        return sorted(
-            os.path.join(out, n)
-            for n in os.listdir(out)
-            if n.endswith(".parquet")
+        return self._write_dir(
+            dv_df.select(
+                F.col("file").cast("string").alias("file"),
+                F.col("pos").cast("bigint").alias("pos"),
+            ).write
         )
 
     def _write_cdf(self, changes: DataFrame, parts: int = 1) -> list[str]:
@@ -2783,57 +2831,7 @@ class TxTable:
         files per commit — measured ~0.5 s of pure task/commit
         overhead per mutation at local scale, and 64 footer opens per
         feed step forever after."""
-        out = os.path.join(self.data_dir, uuid.uuid4().hex)
-        changes.coalesce(max(1, parts)).write.mode("error").parquet(out)
-        return sorted(
-            os.path.join(out, n)
-            for n in os.listdir(out)
-            if n.endswith(".parquet")
-        )
-
-    def _dv_commit(
-        self,
-        base: TxSnapshot,
-        op: str,
-        matched: DataFrame,
-        new: list[str],
-        txn: str | None = None,
-        read_files: "set[str] | None" = None,
-    ) -> int:
-        """Write the DV sidecar for ``matched`` (persisted, non-empty)
-        and commit: same data files (+ optionally ``new`` appended
-        ones), each affected file's vector extended — never a data-file
-        rewrite.  Per-file row-count stats become upper bounds once a
-        file carries a DV; min/max stay sound (a DV only removes rows),
-        so manifest pruning is unaffected."""
-        dv_rows = matched.select(
-            self._norm_fp().alias("file"), F.col("_pos").alias("pos")
-        )
-        dv_files = self._write_dv(dv_rows)
-        # manifest dvs keys must be the RAW paths the file list stores:
-        # sidecar 'file' values stay URI-encoded (every read-side join
-        # compares them against _norm_fp, same space), but a %-encoded
-        # DICT key would be auto-pruned against the committed file list
-        # and the deletes would silently resurrect
-        from urllib.parse import unquote
-
-        affected = sorted(
-            unquote(r.file)
-            for r in dv_rows.select("file").distinct().collect()
-        )
-        # a DELTA, not the composed dict: _commit_vs_appends re-applies
-        # it over each retry base, so a rebase over a racer's unrelated
-        # DV change keeps both writers' vectors
-        dv_delta = {f: list(dv_files) for f in affected}
-        return self._commit_vs_appends(
-            base,
-            op,
-            set(),
-            new,
-            txn=txn,
-            dv_delta=dv_delta,
-            read_files=read_files,
-        )
+        return self._write_dir(changes.coalesce(max(1, parts)).write)
 
     def delete_dv(self, where: Column) -> int:
         """Merge-on-read DELETE (Delta deletion vectors): matching rows
@@ -2845,22 +2843,20 @@ class TxTable:
         read-side cost is one anti-join against the accumulated DV
         set, reclaimed by the next ``compact()``/rewrite of the file
         (which materializes the deletes and retires the vector).
-        Same SQL semantics as ``delete``: NULL-predicate rows survive,
-        already-deleted rows don't double-count, a zero-match call
-        commits an empty-change version.  Returns rows deleted."""
-        base = self._head()
-        matched = (
-            self._scan(base, meta=("fp", "pos")).filter(where).persist()
-        )
-        try:
-            n = matched.count()
-            if n == 0:
-                self._commit_vs_appends(base, "delete_dv", set(), [])
-                return 0
-            self._dv_commit(base, "delete_dv", matched, [])
-            return n
-        finally:
-            matched.unpersist()
+        Per-file row-count stats become upper bounds once a file
+        carries a DV; min/max stay sound (a DV only removes rows), so
+        manifest pruning is unaffected.  Same SQL semantics as
+        ``delete``: NULL-predicate rows survive, already-deleted rows
+        don't double-count, a zero-match call commits an empty-change
+        version.  Returns rows deleted."""
+        return self._mutate(
+            self._head(),
+            "delete_dv",
+            None,
+            lambda d: d.filter(where),
+            lambda hit, n: _Effect(dv=hit.filter(where)),
+            meta=("fp", "pos"),
+        )[1]
 
     def update_dv(self, where: Column, set_map: dict[str, Column]) -> int:
         """Merge-on-read UPDATE: matched rows are DV-deleted in place
@@ -2873,33 +2869,29 @@ class TxTable:
         violation); a zero-match call commits an empty-change version
         BEFORE validation, like ``update``.  Returns rows updated."""
         base = self._head()
-        self._refuse_generated_targets(set_map, "update_dv", base=base)
+        self._refuse_generated_targets(set_map, "update_dv", base)
         self._refuse_identity_set(set_map, "update_dv", base)
         cols = [f["name"] for f in json.loads(base.schema_json)["fields"]]
         bad = sorted(set(set_map) - set(cols))
         if bad:
             raise ValueError(f"update_dv targets unknown columns {bad}")
-        matched = (
-            self._scan(base, meta=("fp", "pos")).filter(where).persist()
-        )
-        try:
-            n = matched.count()
-            if n == 0:
-                self._commit_vs_appends(base, "update_dv", set(), [])
-                return 0
-            updated = matched
+
+        def effect(hit: DataFrame, n: int) -> _Effect:
+            matched = updated = hit.filter(where)
             for col_name, value in set_map.items():
                 updated = updated.withColumn(col_name, value)
-            updated = self._conform_types(updated.select(*cols), base)
-            self._validate_constraints(updated, base, "update_dv")
-            self._validate_generated(
-                updated, self._gen_of(base), "update_dv"
-            )
-            new = self._write_data(updated, self._colmap_or_none(base))
-            self._dv_commit(base, "update_dv", matched, new)
-            return n
-        finally:
-            matched.unpersist()
+            # a zero-match call lands nothing: its empty version commits
+            # before validation
+            return _Effect(insert=updated if n else None, dv=matched)
+
+        return self._mutate(
+            base,
+            "update_dv",
+            None,
+            lambda d: d.filter(where),
+            effect,
+            meta=("fp", "pos"),
+        )[1]
 
     def upsert(self, batch: DataFrame, key: str) -> int:
         """MERGE keyed by ``key``: batch rows replace existing rows
@@ -2910,12 +2902,8 @@ class TxTable:
         batch = batch.dropDuplicates([key])
         base = self.snapshot()
         self._refuse_identity_op(base, "upsert")
-        batch = self._apply_generated(
-            batch, self._gen_of(base), "upsert"
-        )
+        batch = self._apply_generated(batch, self._gen_of(base), "upsert")
         self._check_columns(batch, base, "upsert")
-        # kept rows already passed at their own commit; gate the batch
-        self._validate_constraints(batch, base, "upsert")
         if base is None:
             new = self._write_data(batch)
             return self._commit(
@@ -2925,28 +2913,21 @@ class TxTable:
                 schema_json=self._schema_of(batch),
                 stats=self._merged_stats(None, [], new),
             )
-        cm = self._colmap_or_none(base)
         keys = F.broadcast(batch.select(key).distinct())
-        candidates = self._candidate_files_for_keys(base, batch, [key])
-        affected = self._affected(
-            base, candidates, lambda d: d.join(keys, key, "left_semi")
-        )
-        cdf = None
-        if affected:
-            hit = self._scan(base, affected)
-            kept = hit.join(keys, key, "left_anti")
-            new_data = kept.unionByName(batch.select(*kept.columns))
+
+        def effect(hit: DataFrame, n: int) -> _Effect:
             # exact CDF (r10): replaced rows are the semi-join of the
             # affected files with the batch keys (update preimages);
             # batch rows split into update postimages (key existed)
-            # and plain inserts.  A no-collision upsert
-            # (affected == []) needs no sidecar — its added files are
-            # exactly the batch.
+            # and plain inserts.  A no-collision upsert lands only its
+            # insert, so its added files are exactly the batch.
+            b = batch.select(*hit.columns)
             replaced = hit.join(keys, key, "left_semi")
             rkeys = F.broadcast(replaced.select(key).distinct())
-            b = batch.select(*kept.columns)
-            cdf = self._write_cdf(
-                replaced.withColumn(
+            return _Effect(
+                rewrite=hit.join(keys, key, "left_anti"),
+                insert=b,
+                cdf=replaced.withColumn(
                     "_change_type", F.lit("update_preimage")
                 )
                 .unionByName(
@@ -2959,19 +2940,15 @@ class TxTable:
                         "_change_type", F.lit("insert")
                     )
                 ),
-                parts=len(affected),
             )
-        else:
-            new_data = batch
-        new = self._write_data(new_data, cm)
-        return self._commit_vs_appends(
+
+        return self._mutate(
             base,
             "upsert",
-            set(affected),
-            new,
-            cdf=cdf,
-            read_files=set(candidates),
-        )
+            self._candidate_files_for_keys(base, batch, [key]),
+            lambda d: d.join(keys, key, "left_semi"),
+            effect,
+        )[0]
 
     @staticmethod
     def _conform_types(
@@ -2988,6 +2965,8 @@ class TxTable:
         table (r8 review)."""
         from pyspark.sql.types import StructType
 
+        if base is None or base.schema_json is None:
+            return df  # no manifest schema to conform to
         want = StructType.fromJson(json.loads(base.schema_json))
         have = {f.name: f.dataType for f in df.schema.fields}
         out = [
@@ -3176,6 +3155,8 @@ class TxTable:
             bad = sorted(set(update) - set(cols))
             if bad:
                 raise ValueError(f"merge update targets unknown columns {bad}")
+        if mode not in ("cow", "dv"):
+            raise ValueError(f"merge mode must be 'cow' or 'dv', got {mode!r}")
         # four consumers before the clause join materializes (key-bound
         # agg, broadcast distinct keys, ambiguity flag, the s side of
         # the full outer) — a source derived from the table itself
@@ -3184,77 +3165,70 @@ class TxTable:
         # first job (the candidate-bounds agg below) materializes the
         # cache; the explicit count was one extra pass over the source.
         src = source.select(*cols, *extra).persist()
-        cm = self._colmap_or_none(base)
         has_matched_clause = update is not None or delete_condition is not None
         bkeys = F.broadcast(src.select(*keys).distinct())
-        candidates = self._candidate_files_for_keys(base, src, keys)
-        affected = self._affected(
-            base, candidates, lambda d: d.join(bkeys, keys, "left_semi")
-        )
-        dv_mode = mode == "dv" and bool(affected)
-        if mode not in ("cow", "dv"):
-            raise ValueError(f"merge mode must be 'cow' or 'dv', got {mode!r}")
-        # dv mode carries row identity through the clause join so fired
-        # targets can be deletion-vectored instead of rewritten
-        hit = self._scan(
-            base, affected, meta=("fp", "pos") if dv_mode else ()
-        )
-        tm, sm = "_t_marker", "_s_marker"
-        while tm in cols or tm in extra:  # user column shaped like ours
-            tm = "_" + tm
-        while sm in cols or sm in extra:
-            sm = "_" + sm
-        t = hit.withColumn(tm, F.lit(True)).alias("t")
-        s = src.withColumn(sm, F.lit(True)).alias("s")
-        join_cond = None
-        for k in keys:
-            c = F.col(f"t.{k}") == F.col(f"s.{k}")
-            join_cond = c if join_cond is None else (join_cond & c)
-        j = t.join(s, join_cond, "full_outer")
-        matched = (
-            F.col(f"t.{tm}").isNotNull()
-            & F.col(f"s.{sm}").isNotNull()
-        )
-        src_only = F.col(f"t.{tm}").isNull()
-        do_update = (
-            matched
-            & F.lit(update is not None)
-            & self._merge_cond(update_condition, True)
-        )
-        do_delete = (
-            matched
-            & ~do_update
-            & F.lit(delete_condition is not None)
-            & self._merge_cond(delete_condition, False)
-        )
-        do_insert = (
-            src_only
-            & F.lit(bool(insert))
-            & self._merge_cond(insert_condition, True)
-        )
-        if update == "all" or update is None:
-            upd_exprs = {c: F.col(f"s.{c}") for c in cols}
-        else:
-            upd_exprs = {
-                k: (F.expr(v) if isinstance(v, str) else v)
-                for k, v in update.items()
-            }
-        out_cols = [
-            F.when(do_insert, F.col(f"s.{c}"))
-            .when(do_update, upd_exprs.get(c, F.col(f"t.{c}")))
-            .otherwise(F.col(f"t.{c}"))
-            .alias(c)
-            for c in cols
-        ]
-        keep = (matched & ~do_delete) | (~src_only & ~matched) | do_insert
-        j = j.persist()
-        try:
+        taken = set(cols) | set(extra)
+
+        def fresh(name: str) -> str:  # a user column may be shaped like ours
+            while name in taken:
+                name = "_" + name
+            return name
+
+        tm, sm = fresh("_t_marker"), fresh("_s_marker")
+        joins: list[DataFrame] = []  # the persisted clause join
+        counts: dict = {}  # the clause counts the effect finds
+
+        def effect(hit: DataFrame, n: int) -> _Effect:
+            t = hit.withColumn(tm, F.lit(True)).alias("t")
+            s = src.withColumn(sm, F.lit(True)).alias("s")
+            join_cond = None
+            for k in keys:
+                c = F.col(f"t.{k}") == F.col(f"s.{k}")
+                join_cond = c if join_cond is None else (join_cond & c)
+            matched = (
+                F.col(f"t.{tm}").isNotNull()
+                & F.col(f"s.{sm}").isNotNull()
+            )
+            src_only = F.col(f"t.{tm}").isNull()
+            do_update = (
+                matched
+                & F.lit(update is not None)
+                & self._merge_cond(update_condition, True)
+            )
+            do_delete = (
+                matched
+                & ~do_update
+                & F.lit(delete_condition is not None)
+                & self._merge_cond(delete_condition, False)
+            )
+            do_insert = (
+                src_only
+                & F.lit(bool(insert))
+                & self._merge_cond(insert_condition, True)
+            )
+            if update == "all" or update is None:
+                upd_exprs = {c: F.col(f"s.{c}") for c in cols}
+            else:
+                upd_exprs = {
+                    k: (F.expr(v) if isinstance(v, str) else v)
+                    for k, v in update.items()
+                }
+            out_cols = [
+                F.when(do_insert, F.col(f"s.{c}"))
+                .when(do_update, upd_exprs.get(c, F.col(f"t.{c}")))
+                .otherwise(F.col(f"t.{c}"))
+                .alias(c)
+                for c in cols
+            ]
+            keep = (matched & ~do_delete) | (~src_only & ~matched) | do_insert
+            j = t.join(s, join_cond, "full_outer").persist()
+            joins.append(j)
             clause_counts = [
                 F.count(F.when(do_update, 1)),
                 F.count(F.when(do_delete, 1)),
                 F.count(F.when(do_insert, 1)),
             ]
-            if affected and has_matched_clause:
+            if n and has_matched_clause:
                 # Delta's ambiguous-merge guard (>1 source rows hitting
                 # one target row has no deterministic outcome), folded
                 # into the SAME aggregate job as the clause counts
@@ -3264,16 +3238,8 @@ class TxTable:
                 # flag is ambiguous.  The probe join exists only under
                 # this agg — the result/CDF frames still read the bare
                 # persisted join.
-                taken = set(cols) | set(extra)
-                dup_col = "_dup_src"
-                while dup_col in taken:  # user column shaped like ours
-                    dup_col = "_" + dup_col
-                dks = []
-                for i in range(len(keys)):
-                    dk = f"_dk{i}"
-                    while dk in taken:
-                        dk = "_" + dk
-                    dks.append(dk)
+                dup_col = fresh("_dup_src")
+                dks = [fresh(f"_dk{i}") for i in range(len(keys))]
                 dupflag = F.broadcast(
                     src.groupBy(*keys)
                     .agg((F.count(F.lit(1)) > F.lit(1)).alias(dup_col))
@@ -3308,90 +3274,69 @@ class TxTable:
                     )
             else:
                 n_upd, n_del, n_ins = j.agg(*clause_counts).first()
-            changed = (n_upd + n_del) > 0
-            if changed and dv_mode:
+            counts.update(updated=n_upd, deleted=n_del, inserted=n_ins)
+            fired = j.filter(do_update | do_delete)
+            post = j.filter(do_update | do_insert).select(*out_cols)
+            if n_upd + n_del and mode == "dv":
                 # merge-on-read: only fired rows materialize — updated
                 # images + inserts append, fired targets DV out
-                result = j.filter(do_insert | do_update).select(*out_cols)
-            elif changed:
-                result = j.filter(keep).select(*out_cols)
-            else:
-                # matched clauses fired nowhere: carry ALL base files by
-                # reference, write only the inserts
-                result = j.filter(do_insert).select(*out_cols)
-            if changed or n_ins > 0:
-                result = self._conform_types(result, base)
-                self._validate_constraints(result, base, "merge")
-                self._validate_generated(
-                    result, self._gen_of(base), "merge"
+                return _Effect(
+                    insert=post,
+                    dv=fired.select(
+                        F.col("t._fp").alias("_fp"),
+                        F.col("t._pos").alias("_pos"),
+                    ),
+                    op="merge_dv",
                 )
-                new = self._write_data(result, cm)
-            else:
-                new = []  # empty-change version, Delta parity
-            if changed and dv_mode:
-                fired = j.filter(do_update | do_delete).select(
-                    F.col(f"t._fp").alias("_fp"),
-                    F.col(f"t._pos").alias("_pos"),
-                )
-                version = self._dv_commit(
-                    base,
-                    "merge_dv",
-                    fired,
-                    new,
-                    txn=txn,
-                    read_files=set(candidates),
-                )
-            else:
-                cdf = None
-                if changed:
-                    # exact CDF (r10): the joined frame knows exactly
-                    # which rows fired — preimages of updates/deletes
-                    # tag 'delete', postimages of updates + inserts tag
-                    # 'insert'; read_changes then skips the file diff
-                    # (which would re-emit every carried-along row of
-                    # the rewritten files).  Insert-only merges need no
-                    # sidecar: their added files are exactly the
-                    # inserts.
-                    pre = j.filter(do_update | do_delete).select(
+            if n_upd + n_del:
+                # exact CDF (r10): the joined frame knows exactly which
+                # rows fired — preimages of updates/deletes, postimages
+                # of updates + inserts; read_changes then skips the
+                # file diff (which would re-emit every carried-along
+                # row of the rewritten files)
+                return _Effect(
+                    rewrite=j.filter(keep).select(*out_cols),
+                    changed=post,
+                    cdf=fired.select(
                         *[F.col(f"t.{c}").alias(c) for c in cols],
                         F.when(do_update, F.lit("update_preimage"))
                         .otherwise(F.lit("delete"))
                         .alias("_change_type"),
-                    )
-                    post = self._conform_types(
+                    ).unionByName(
                         j.filter(do_update | do_insert).select(
                             *out_cols,
-                            F.when(
-                                do_update, F.lit("update_postimage")
-                            )
+                            F.when(do_update, F.lit("update_postimage"))
                             .otherwise(F.lit("insert"))
                             .alias("_change_type"),
-                        ),
-                        base,
-                        passthrough=("_change_type",),
-                    )
-                    cdf = self._write_cdf(
-                        pre.unionByName(post),
-                        parts=len(affected),
-                    )
-                version = self._commit_vs_appends(
-                    base,
-                    "merge",
-                    set(affected) if changed else set(),
-                    new,
-                    txn=txn,
-                    cdf=cdf,
-                    read_files=set(candidates),
+                        )
+                    ),
                 )
+            # matched clauses fired nowhere: the affected files carry BY
+            # REFERENCE and only the inserts land — their added files
+            # are exactly the inserts, so no sidecar either
+            return _Effect(
+                insert=(
+                    j.filter(do_insert).select(*out_cols) if n_ins else None
+                ),
+            )
+
+        try:
+            version, _ = self._mutate(
+                base,
+                "merge",
+                self._candidate_files_for_keys(base, src, keys),
+                lambda d: d.join(bkeys, keys, "left_semi"),
+                effect,
+                # dv mode carries row identity through the clause join
+                # so fired targets can be deletion-vectored
+                meta=("fp", "pos") if mode == "dv" else (),
+                txn=txn,
+            )
         finally:
-            j.unpersist()
+            for j in joins:
+                j.unpersist()
             src.unpersist()
-        return {
-            "updated": n_upd,
-            "deleted": n_del,
-            "inserted": n_ins,
-            "version": version,
-        }
+        return {**counts, "version": version}
 
     def replace_where(
         self,
@@ -3418,7 +3363,9 @@ class TxTable:
         re-invoke (safe under the txn tag).
 
         Returns ``{"deleted", "inserted", "version"}``."""
-        return self._replace_impl(df, where, txn, None)
+        base = self._head()
+        pred = F.expr(where) if isinstance(where, str) else where
+        return self._replace(base, df, pred, list(base.files), txn)
 
     def replace_range(
         self,
@@ -3440,38 +3387,27 @@ class TxTable:
         locate matches (predicate pushdown makes that cheap, but it is
         still O(files)); use this form whenever the slice is a range
         on a ``stats_cols`` column."""
-        if lo is None and hi is None:
-            raise ValueError("replace_range needs at least one bound")
-        pred = F.lit(True)
-        if lo is not None:
-            pred = F.col(col) >= F.lit(lo)
-        if hi is not None:
-            pred = pred & (F.col(col) <= F.lit(hi))
-        base = self.snapshot()
-        if base is None:
-            raise FileNotFoundError(f"no committed version under {self.root}")
-        candidates = self.files_in_range(col, lo, hi, snap=base)
-        return self._replace_impl(df, pred, txn, candidates, base=base)
+        pred = self._range_pred(col, lo, hi)
+        base = self._head()
+        return self._replace(
+            base, df, pred, self.files_in_range(col, lo, hi, snap=base), txn
+        )
 
-    def _replace_impl(
+    def _replace(
         self,
+        base: TxSnapshot,
         df: DataFrame,
-        where: "Column | str",
+        pred: Column,
+        files: list[str],
         txn: str | None,
-        candidates: list[str] | None,
-        base: "TxSnapshot | None" = None,
     ) -> dict:
-        pred = F.expr(where) if isinstance(where, str) else where
-        if base is None:
-            base = self.snapshot()
-        if base is None:
-            raise FileNotFoundError(f"no committed version under {self.root}")
+        """The replace_where/replace_range guards and effect over the
+        search set ``files``: the slice's rows delete (a NULL
+        predicate keeps the row), ``df`` inserts."""
         self._refuse_identity_op(base, "replace_where")
         if txn is not None and txn in self._committed_txns():
             return {"deleted": 0, "inserted": 0, "version": base.version}
-        df = self._apply_generated(
-            df, self._gen_of(base), "replace_where"
-        )
+        df = self._apply_generated(df, self._gen_of(base), "replace_where")
         self._check_columns(df, base, "replace_where")
         df = self._conform_types(df, base)
         n_ins, n_outside = df.agg(
@@ -3484,56 +3420,24 @@ class TxTable:
                 "satisfy the predicate; Delta rejects these too "
                 "(they would silently widen the overwrite)"
             )
-        self._validate_constraints(df, base, "replace_where")
-        cm = self._colmap_or_none(base)
-        search = base.files if candidates is None else candidates
-        affected = self._affected(base, search, lambda d: d.filter(pred))
-        cdf = None
-        hit = None
-        try:
-            if affected:
-                # r15 (guide §1.4/§5): the replaced slice used to be
-                # re-scanned three times (delete count, CDF preimages,
-                # the kept-rows rewrite) — persist it once and let the
-                # count ride the rewrite job via ``observe`` (below the
-                # kept-filter, so filtered-out matches still count).
-                hit = self._scan(base, affected).persist()
-                obs = Observation()
-                kept = hit.observe(
-                    obs, F.count(F.when(pred, 1)).alias("n")
-                ).filter(~pred.eqNullSafe(F.lit(True)))
-                new_data = kept.unionByName(df)
-                # exact CDF (r10): the replaced slice's rows tag
-                # 'delete', the incoming frame tags 'insert' — the
-                # rewritten files' kept rows never re-emit.  A
-                # no-overlap replace (affected == []) needs no sidecar:
-                # added files == df.
-                cdf = self._write_cdf(
-                    hit.filter(pred)
-                    .withColumn("_change_type", F.lit("delete"))
-                    .unionByName(
-                        df.withColumn("_change_type", F.lit("insert"))
-                    ),
-                    parts=len(affected),
-                )
-            else:
-                new_data = df
-            new = (
-                self._write_data(new_data, cm) if (affected or n_ins) else []
-            )
-            n_del = int(obs.get["n"] or 0) if affected else 0
-            version = self._commit_vs_appends(
-                base,
-                "replace_where",
-                set(affected),
-                new,
-                txn=txn,
-                cdf=cdf,
-                read_files=set(search),
-            )
-        finally:
-            if hit is not None:
-                hit.unpersist()
+        # exact CDF (r10): the replaced slice's rows tag 'delete', the
+        # incoming frame tags 'insert' — the rewritten files' kept rows
+        # never re-emit.  A no-overlap replace lands only its insert,
+        # so its added files are exactly df.
+        version, n_del = self._mutate(
+            base,
+            "replace_where",
+            files,
+            lambda d: d.filter(pred),
+            lambda hit, n: _Effect(
+                rewrite=hit.filter(~pred.eqNullSafe(F.lit(True))),
+                insert=df if n_ins else None,
+                cdf=hit.filter(pred)
+                .withColumn("_change_type", F.lit("delete"))
+                .unionByName(df.withColumn("_change_type", F.lit("insert"))),
+            ),
+            txn=txn,
+        )
         return {"deleted": n_del, "inserted": n_ins, "version": version}
 
     def _zorder_key(self, df: DataFrame, cols: list[str], bits: int = 6):
@@ -3901,7 +3805,7 @@ class TxTable:
         # arrange=False: compact already shaped the frame (cluster
         # order / output sizing); the writer's partitionBy alone
         # enforces file-per-value on partitioned tables
-        new = self._write_data(packed, cm, arrange=False)
+        new = self._write_data(packed, cm, arrange=False, base=base)
         return self._commit(
             survivors + new,
             "compact",
@@ -3959,14 +3863,26 @@ class TxTable:
         )
         if not affected:
             return base.version
-        cm = self._colmap_or_none(base)
-        rewritten = self._scan(base, affected)
-        new = self._write_data(rewritten, cm)
-        # purge reads only the files it rewrites — a racer touching
-        # OTHER files rebases cleanly (disjoint-rewrite admission)
-        return self._commit_vs_appends(
-            base, "purge", set(affected), new, read_files=set(affected)
-        )
+        from ..session import raised_conf
+
+        # one output per purged file, so a clustered layout keeps its
+        # per-file key ranges: an open cost above any split size stops
+        # the scan from packing small files into one task.  Holds on
+        # unpartitioned tables whose DV set broadcasts (a shuffled DV
+        # join and the partitioned write's hash arrange both regroup
+        # rows).  purge reads only the files it rewrites — a racer
+        # touching OTHER files rebases cleanly (disjoint-rewrite
+        # admission)
+        with raised_conf(
+            self.spark, "spark.sql.files.openCostInBytes", str(1 << 40)
+        ):
+            return self._mutate(
+                base,
+                "purge",
+                affected,
+                None,
+                lambda hit, n: _Effect(rewrite=hit),
+            )[0]
 
     # ------------------------------------------------------- cleanup
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -24,6 +25,8 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+    s.stop()
+    shutil.rmtree(wh, ignore_errors=True)
 
 
 def pytest_collection_modifyitems(config, items):

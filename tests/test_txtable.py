@@ -1521,6 +1521,49 @@ def test_merge_and_replace_conform_types_to_manifest_schema(spark, tmp_path):
     t.replace_where(narrow, "k = 2")
     assert dict(t.read().dtypes)["price"] == "double"
     assert {r.k: r.price for r in t.read().collect()} == {1: 42.0, 2: 9.0}
+    # update / update_range / upsert / append: a bigint value into an
+    # int column lands as int, and the table stays readable
+    root2 = str(tmp_path / "t2")
+    t2 = TxTable.create(
+        spark, root2, spark.createDataFrame([(1, 10), (2, 20)], "k bigint, v int")
+    )
+    wide = F.lit(7).cast("bigint")
+    t2.update(F.col("k") == 1, {"v": wide})
+    t2.update_range("k", 2, 2, {"v": wide + 1})
+    t2.upsert(spark.createDataFrame([(2, 9), (3, 30)], "k bigint, v bigint"), "k")
+    t2.append(spark.createDataFrame([(4, 40)], "k bigint, v bigint"))
+    back = TxTable(spark, root2).read()
+    assert dict(back.dtypes)["v"] == "int"
+    assert {r.k: r.v for r in back.collect()} == {1: 7, 2: 9, 3: 30, 4: 40}
+
+
+def test_update_reads_head_once_like_delete(spark, tmp_path, monkeypatch):
+    """update/update_range run their guards, search, write and commit
+    against ONE head snapshot: as many snapshot() reads as delete."""
+    root = str(tmp_path / "t")
+    TxTable.create(spark, root, _mkdf(spark, [(1, "a"), (2, "b"), (3, "c")]))
+    calls = []
+    orig = TxTable.snapshot
+
+    def counting(self, version=None):
+        calls.append(version)
+        return orig(self, version)
+
+    monkeypatch.setattr(TxTable, "snapshot", counting)
+
+    def reads(mutation) -> int:
+        del calls[:]
+        mutation(TxTable(spark, root))  # fresh handle: nothing cached
+        return len(calls)
+
+    n_delete = reads(lambda t: t.delete(F.col("k") == 1))
+    n_update = reads(lambda t: t.update(F.col("k") == 2, {"v": F.lit("B")}))
+    n_range = reads(lambda t: t.update_range("k", 3, 3, {"v": F.lit("C")}))
+    assert n_update == n_delete and n_range == n_delete, (
+        n_update,
+        n_range,
+        n_delete,
+    )
 
 
 def test_stats_cols_persist_in_manifest_for_fresh_handles(spark, tmp_path):

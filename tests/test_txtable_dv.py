@@ -187,7 +187,14 @@ def test_update_dv_gated_by_constraints(spark, tmp_path):
         t.update_dv(F.col("k") == 1, {"price": F.lit(99999.0)})
     assert t.read().count() == 10, "failed update changed nothing"
     # the failed attempt's version bookkeeping: no partial commit
-    assert not t.snapshot().dvs
+    before = t.snapshot()
+    assert not before.dvs
+    # zero match: the empty-change version commits before validation,
+    # with the same file list (no empty data file, no vector)
+    assert t.update_dv(F.col("k") < 0, {"price": F.lit(99999.0)}) == 0
+    snap = t.snapshot()
+    assert snap.version == before.version + 1 and snap.op == "update_dv"
+    assert list(snap.files) == list(before.files) and not snap.dvs
 
 
 def test_read_since_applies_head_dvs_to_new_files(spark, tmp_path):

@@ -55,7 +55,7 @@ def instrument():
     T = tx.TxTable
     for m in [
         "_write_data", "_stats_for", "_commit", "append", "read",
-        "_scan", "_affected", "merge",
+        "_scan", "_affected", "_mutate", "merge",
         "update", "delete", "replace_where", "delete_dv", "update_dv",
         "compact", "read_changes", "_validate_constraints",
         "_committed_txns", "snapshot", "vacuum", "upsert",
