@@ -192,6 +192,9 @@ class TxTable:
     # full (checkpoint) manifest cadence — class attribute so tests
     # can shrink it; see txlog.CHECKPOINT_EVERY
     CHECKPOINT_EVERY = txlog.CHECKPOINT_EVERY
+    # lost-race retries of a commit (``_commit_new``,
+    # ``_commit_vs_appends``) before it raises TxConflictError
+    _COMMIT_RETRIES = 5
 
     def __init__(
         self,
@@ -559,11 +562,15 @@ class TxTable:
     def _to_epoch_us(timestamp) -> int:
         """Normalize a user TIMESTAMP AS OF bound to epoch µs.
         Accepts datetime (naive = UTC, the engine's session timezone),
-        ISO-8601 string, or epoch seconds (int/float)."""
+        ISO-8601 string, or epoch seconds (int/float, or a string of
+        one — the source's ``timestampAsOf`` option form)."""
         import datetime as _dt
 
         if isinstance(timestamp, str):
-            timestamp = _dt.datetime.fromisoformat(timestamp)
+            try:
+                timestamp = _dt.datetime.fromisoformat(timestamp)
+            except ValueError:
+                timestamp = float(timestamp)
         if isinstance(timestamp, _dt.datetime):
             if timestamp.tzinfo is None:
                 timestamp = timestamp.replace(tzinfo=_dt.timezone.utc)
@@ -1161,11 +1168,11 @@ class TxTable:
             entry = {
                 "rows": md.num_rows,
                 "min": {
-                    lc: (per[pc][0] if pc in per else None)
+                    lc: txlog.stat_value(per[pc][0] if pc in per else None)
                     for pc, lc in need.items()
                 },
                 "max": {
-                    lc: (per[pc][1] if pc in per else None)
+                    lc: txlog.stat_value(per[pc][1] if pc in per else None)
                     for pc, lc in need.items()
                 },
             }
@@ -1196,7 +1203,7 @@ class TxTable:
         a colmap is in force."""
         from urllib.parse import unquote, urlparse
 
-        if not files:
+        if not files or not self.stats_cols:
             return {}
         phys = {c["name"]: c["phys"] for c in (colmap or [])}
         footer = self._stats_from_footers(files, phys)
@@ -1221,8 +1228,8 @@ class TxTable:
             # the file's stats land under a key no read ever matches
             out[unquote(urlparse(r._fp).path)] = {
                 "rows": r._rows,
-                "min": {c: r[f"_min_{c}"] for c in cols},
-                "max": {c: r[f"_max_{c}"] for c in cols},
+                "min": {c: txlog.stat_value(r[f"_min_{c}"]) for c in cols},
+                "max": {c: txlog.stat_value(r[f"_max_{c}"]) for c in cols},
             }
         return out
 
@@ -1230,9 +1237,10 @@ class TxTable:
         self,
         base: TxSnapshot | None,
         carried: list[str],
-        new_files: list[str],
-        colmap: list[dict] | None = None,
+        new_stats: dict | None = None,
     ) -> dict | None:
+        """The commit's stats: the carried files' entries from ``base``
+        plus ``new_stats``, the new files' own (``_stats_for``)."""
         if not self.stats_cols:
             # keep whatever stats the carried files already have (a
             # stats-less writer must not blind a stats-ful table)
@@ -1241,9 +1249,7 @@ class TxTable:
             return None
         prev = base.stats if base and base.stats else {}
         merged = {f: prev[f] for f in carried if f in prev}
-        if colmap is None:
-            colmap = self._colmap_or_none(base)
-        merged.update(self._stats_for(new_files, colmap))
+        merged.update(new_stats or {})
         return merged
 
     def _commit(
@@ -1364,20 +1370,18 @@ class TxTable:
             ) from None
         return version
 
-    def overwrite(
-        self, df: DataFrame, txn: str | None = None, max_retries: int = 5
-    ) -> int:
+    def overwrite(self, df: DataFrame, txn: str | None = None) -> int:
         """Replace the table; with ``txn`` the REPLACEMENT STATE and
         its idempotency tag commit in one atomic manifest — the
         primitive an exactly-once view refresher needs (state and
         watermark can never disagree, whatever crashes between).
 
         Like ``append``, a lost manifest race is resolved by
-        re-reading the snapshot: if the txn tag (ours, replayed by a
-        twin) is now committed the write no-ops, otherwise the SAME
-        already-written files re-commit against the new base — a
-        losing refresher never surfaces TxConflictError to its caller
-        for a race it can resolve (ADVICE r5)."""
+        re-reading the snapshot (``_commit_new``): if the txn tag
+        (ours, replayed by a twin) is now committed the write no-ops,
+        otherwise the SAME already-written files re-commit against the
+        new base — a losing refresher never surfaces TxConflictError to
+        its caller for a race it can resolve (ADVICE r5)."""
         base = self.snapshot()
         if txn is not None and txn in self._committed_txns():
             return base.version  # replayed refresh: already applied
@@ -1413,48 +1417,34 @@ class TxTable:
         finally:  # a failed check or write must not leak the pin
             if pin is not None:
                 pin.unpersist()
-        for attempt in range(max_retries + 1):
-            try:
-                return self._commit(
-                    new,
-                    "overwrite",
-                    base,
-                    txn=txn,
-                    schema_json=self._schema_of(df),
-                    stats=self._merged_stats(None, [], new, cm),
-                    colmap=cm,
-                    retired=retired,
-                    max_id=max_id,
-                    generated=gen if base is None else None,
-                    identity=idn,
-                )
-            except TxConflictError:
-                if attempt == max_retries:
-                    raise
-                base = self.snapshot()
-                if txn is not None and txn in self._committed_txns():
-                    return base.version
-                if idn is not None and (
-                    base is None
-                    or base.identity is None
-                    or base.identity["next"] != assigned_from
-                ):
-                    raise TxConflictError(
-                        f"identity watermark advanced concurrently "
-                        f"under {self.root}; re-invoke overwrite"
-                    ) from None
-                # a racing add_constraint must gate OUR rows too
-                # (append's retry does the same)
-                self._validate_constraints(df, base, "overwrite")
-                cm2, retired, max_id = self._overwrite_colmap(
-                    base, df.columns
-                )
-                if cm2 != cm:
-                    # the racing commit changed the column mapping; our
-                    # files were written under the stale physical names
-                    # — the caller must re-invoke against the new base
-                    raise
-                cm = cm2
+
+        def recheck(nb: "TxSnapshot | None") -> dict:
+            self._refuse_watermark_race(nb, idn, assigned_from, "overwrite")
+            # a racing add_constraint must gate OUR rows too
+            self._validate_constraints(df, nb, "overwrite")
+            cm2, retired2, max_id2 = self._overwrite_colmap(nb, df.columns)
+            self._refuse_colmap_race(cm2, cm, "overwrite")
+            return {
+                "retired": retired2,
+                "max_id": max_id2,
+                "generated": gen if nb is None else None,
+            }
+
+        return self._commit_new(
+            new,
+            "overwrite",
+            base,
+            txn,
+            self._stats_for(new, cm),
+            recheck,
+            replace=True,
+            schema_json=self._schema_of(df),
+            colmap=cm,
+            retired=retired,
+            max_id=max_id,
+            generated=gen if base is None else None,
+            identity=idn,
+        )
 
     def _overwrite_colmap(
         self, base: "TxSnapshot | None", columns: list[str]
@@ -1488,9 +1478,7 @@ class TxTable:
                 retired.append(c["phys"])
         return out, retired, max_id
 
-    def append(
-        self, df: DataFrame, txn: str | None = None, max_retries: int = 5
-    ) -> int:
+    def append(self, df: DataFrame, txn: str | None = None) -> int:
         """Append; with ``txn`` the write is idempotent — a tag already
         committed is skipped, which is what makes an at-least-once
         replayer (foreachBatch keyed by batch_id) exactly-once.
@@ -1499,9 +1487,9 @@ class TxTable:
         commute, so a lost manifest race is resolved by re-reading the
         snapshot and re-committing the SAME already-written data files
         against the new base — no data rewrite, just a fresh manifest
-        (bounded by ``max_retries``; the txn-tag check re-runs each
-        attempt in case the conflicting commit was our own replayed
-        tag)."""
+        (``_commit_new``, bounded by ``_COMMIT_RETRIES``; the txn-tag
+        check re-runs each attempt in case the conflicting commit was
+        our own replayed tag)."""
         base = self.snapshot()
         idn = self._identity_of(base)
         self._refuse_identity_col(df, idn, "append")
@@ -1537,50 +1525,104 @@ class TxTable:
         finally:  # a failed check or write must not leak the pin
             if pin is not None:
                 pin.unpersist()
-        for attempt in range(max_retries + 1):
-            carried = list(base.files) if base else []
-            schema = (
-                base.schema_json
-                if base and base.schema_json
-                else self._schema_of(df)
+
+        def recheck(nb: "TxSnapshot | None") -> None:
+            self._check_columns(df, nb, "append")
+            # a racing add_constraint must gate OUR rows too
+            self._validate_constraints(df, nb, "append")
+            self._refuse_colmap_race(self._colmap_or_none(nb), cm, "append")
+            self._refuse_watermark_race(nb, idn, assigned_from, "append")
+
+        return self._commit_new(
+            new,
+            "append",
+            base,
+            txn,
+            self._stats_for(new, cm),
+            recheck,
+            schema_json=self._schema_of(df),
+            identity=idn,
+        )
+
+    def _refuse_colmap_race(self, head_cm, wrote_cm, op: str) -> None:
+        """A racing schema-evolution commit changed the column mapping:
+        files already written speak stale physical names, so they must
+        not be re-committed — the caller re-invokes."""
+        if head_cm != wrote_cm:
+            raise TxConflictError(
+                f"the column mapping of {self.root} changed concurrently; "
+                f"re-invoke {op}"
             )
+
+    def _refuse_watermark_race(
+        self, nb: "TxSnapshot | None", idn, assigned_from, op: str
+    ) -> None:
+        """The racer consumed identity watermark: our files hold ids
+        the new head may already have assigned — a re-commit would
+        duplicate the surrogate key.  Non-commuting, so surface it (the
+        merge/replace_where convention): callers re-invoke and the
+        fresh attempt assigns from the new watermark."""
+        if idn is not None and (
+            nb is None
+            or nb.identity is None
+            or nb.identity["next"] != assigned_from
+        ):
+            raise TxConflictError(
+                f"identity watermark advanced concurrently "
+                f"under {self.root}; re-invoke {op}"
+            )
+
+    def _commit_new(
+        self,
+        files: list[str],
+        op: str,
+        base: "TxSnapshot | None",
+        txn: str | None,
+        stats: dict | None,
+        recheck,
+        replace: bool = False,
+        schema_json: str | None = None,
+        **commit_kw,
+    ) -> int:
+        """THE commit of freshly written data files — ``append``,
+        ``overwrite`` and both ``format("txtable")`` sink writers land
+        here.  ``files`` join ``base``'s files (``replace``: replace
+        them) with ``stats``, the new files' own per-file stats, beside
+        the carried files' entries; ``schema_json`` is the new data's
+        schema, kept only where the base has none or is replaced.  A
+        ``txn`` already in the log no-ops.  A lost race re-reads the
+        head and re-links the SAME files — new files commute with any
+        racer — once ``recheck(new_base)`` has re-validated them
+        against it: it raises to refuse and may return updated
+        ``_commit`` keywords.  Manifest-only: it never touches Spark,
+        so a session-less handle (``TxTable(None, root)``) commits the
+        sink's Arrow-written files through it."""
+        for attempt in range(self._COMMIT_RETRIES + 1):
+            if txn is not None and txn in self._committed_txns():
+                return base.version if base else 0
+            if attempt:
+                commit_kw.update(recheck(base) or {})
+            carried = list(base.files) if base and not replace else []
             try:
                 return self._commit(
-                    carried + new,
-                    "append",
+                    carried + files,
+                    op,
                     base,
                     txn,
-                    schema_json=schema,
-                    stats=self._merged_stats(base, carried, new, cm),
-                    identity=idn,
+                    schema_json=(
+                        base.schema_json
+                        if base and base.schema_json and not replace
+                        else schema_json
+                    ),
+                    stats=self._merged_stats(
+                        None if replace else base, carried, stats
+                    ),
+                    **commit_kw,
                 )
             except TxConflictError:
-                if attempt == max_retries:
+                if attempt == self._COMMIT_RETRIES:
                     raise
                 base = self.snapshot()
-                if txn is not None and txn in self._committed_txns():
-                    return base.version if base else 0
-                self._check_columns(df, base, "append")
-                # a racing add_constraint must gate OUR rows too
-                self._validate_constraints(df, base, "append")
-                if self._colmap_or_none(base) != cm:
-                    # racing schema-evolution commit: our files carry
-                    # stale physical names — caller must re-invoke
-                    raise
-                if idn is not None and (
-                    base.identity is None
-                    or base.identity["next"] != assigned_from
-                ):
-                    # the racer consumed watermark: our files hold ids
-                    # the new head may already have assigned — a
-                    # re-commit would duplicate the surrogate key.
-                    # Non-commuting, so surface it (the merge/
-                    # replace_where convention): callers re-invoke and
-                    # the fresh attempt assigns from the new watermark.
-                    raise TxConflictError(
-                        f"identity watermark advanced concurrently "
-                        f"under {self.root}; re-invoke append"
-                    ) from None
 
     def _head(self) -> TxSnapshot:
         base = self.snapshot()
@@ -1632,7 +1674,7 @@ class TxTable:
                 "add_column",
                 base,
                 schema_json=json.dumps(schema.jsonValue()),
-                stats=self._merged_stats(base, list(base.files), []),
+                stats=self._merged_stats(base, list(base.files)),
             )
         cm, retired, max_id = self._materialized_colmap(base)
         max_id += 1
@@ -1649,7 +1691,7 @@ class TxTable:
             "add_column",
             base,
             schema_json=json.dumps(schema.jsonValue()),
-            stats=self._merged_stats(base, list(base.files), []),
+            stats=self._merged_stats(base, list(base.files)),
             colmap=cm,
             retired=retired,
             max_id=max_id,
@@ -1698,7 +1740,7 @@ class TxTable:
             # column or its next write crashes on the missing field
             # (_stats_for also self-heals for OTHER instances)
             self.stats_cols = [c for c in self.stats_cols if c != name]
-        stats = self._merged_stats(base, list(base.files), [])
+        stats = self._merged_stats(base, list(base.files))
         if stats:  # drop the column's now-dead skipping bounds —
             # on COPIES: _merged_stats carries the base snapshot's
             # per-file dicts by reference, and a caller holding the
@@ -1792,7 +1834,7 @@ class TxTable:
             self.stats_cols = [
                 new if c == old else c for c in self.stats_cols
             ]
-        stats = self._merged_stats(base, list(base.files), [], cm)
+        stats = self._merged_stats(base, list(base.files))
         if stats:  # re-key skipping bounds to the new logical name
             import copy
 
@@ -2170,12 +2212,12 @@ class TxTable:
     @staticmethod
     def _norm_bound(bound, stored_exemplar):
         """Align a caller bound with the manifest's stat representation.
-        Stats JSON-round-trip through ``default=str``, so date /
-        timestamp mins and maxes are stored as ISO strings (lexical
-        order == temporal order); ``str(bound)`` produces the identical
-        form.  Decimals/bytes are rejected loudly — their lexical order
-        is NOT value order, and a silent mis-compare here would skip
-        files and change results."""
+        Date / timestamp mins and maxes are stored as ISO strings
+        (lexical order == temporal order, ``txlog.stat_value``), which
+        also yields the identical form for a bound — a tz-aware one
+        included.  Decimals/bytes are rejected loudly — their lexical
+        order is NOT value order, and a silent mis-compare here would
+        skip files and change results."""
         import datetime
         import decimal
 
@@ -2184,7 +2226,7 @@ class TxTable:
         if isinstance(bound, str):
             return bound
         if isinstance(bound, (datetime.date, datetime.datetime)):
-            return str(bound)
+            return txlog.stat_value(bound)
         raise TypeError(
             "files_in_range: stats for this column are stored as strings; "
             f"supported bound types are str/date/datetime, got "
@@ -2366,9 +2408,6 @@ class TxTable:
         }
         return not (dv_changed & read_files)
 
-    # lost-race rebases a mutation commit attempts before raising
-    _COMMIT_RETRIES = 5
-
     def _commit_vs_appends(
         self,
         base: TxSnapshot,
@@ -2396,7 +2435,7 @@ class TxTable:
         mirrored: a racing blind append CAN land rows a just-committed
         upsert/merge would have claimed (duplicate keys) —
         WriteSerializable, not Serializable."""
-        cm = self._colmap_or_none(base)
+        new_stats = self._stats_for(new, self._colmap_or_none(base))
         for attempt in range(self._COMMIT_RETRIES + 1):
             survivors = [f for f in base.files if f not in affected]
             dvs = None
@@ -2411,7 +2450,7 @@ class TxTable:
                     base,
                     txn=txn,
                     schema_json=base.schema_json,
-                    stats=self._merged_stats(base, survivors, new, cm),
+                    stats=self._merged_stats(base, survivors, new_stats),
                     dvs=dvs,
                     cdf=cdf,
                 )
@@ -2659,6 +2698,21 @@ class TxTable:
         bounds = self._predicate_bounds(where)
         if not bounds:
             return None
+        cand = self._files_within(base, bounds)
+        # nothing stats-prunable: the read set is the whole table
+        # (same admission behavior as read_files=None)
+        return sorted(cand) if cand is not None else list(base.files)
+
+    def _files_within(
+        self, base: TxSnapshot, bounds: dict
+    ) -> "set[str] | None":
+        """The files of ``base`` whose stats admit every ``{col: (lo,
+        hi)}`` bound — the pruning core of ``_pruned_files`` (bounds
+        from a Column predicate) and the ``format("txtable")`` reader's
+        ``pushFilters`` (bounds from pushed filters).  Only stats
+        columns prune; a bound ``_norm_bound`` cannot compare with the
+        stored form (a Decimal, say) leaves its column unpruned.  None
+        when no bound prunes."""
         cols = set(base.stats_cols or self.stats_cols or ())
         cand: "set[str] | None" = None
         for c, (lo, hi) in bounds.items():
@@ -2669,9 +2723,7 @@ class TxTable:
             except TypeError:
                 continue  # bound/stat representation mismatch
             cand = fs if cand is None else cand & fs
-        # nothing stats-prunable: the read set is the whole table
-        # (same admission behavior as read_files=None)
-        return sorted(cand) if cand is not None else list(base.files)
+        return cand
 
     @staticmethod
     def _update_effect(where: Column, set_map: dict[str, Column]):
@@ -2911,7 +2963,7 @@ class TxTable:
                 "upsert",
                 None,
                 schema_json=self._schema_of(batch),
-                stats=self._merged_stats(None, [], new),
+                stats=self._merged_stats(None, [], self._stats_for(new)),
             )
         keys = F.broadcast(batch.select(key).distinct())
 
@@ -3811,7 +3863,9 @@ class TxTable:
             "compact",
             base,
             schema_json=base.schema_json,
-            stats=self._merged_stats(base, survivors, new, cm),
+            stats=self._merged_stats(
+                base, survivors, self._stats_for(new, cm)
+            ),
         )
 
     def purge_dvs(self, min_deleted_frac: float = 0.05) -> int:

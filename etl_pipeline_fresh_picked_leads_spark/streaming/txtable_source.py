@@ -26,6 +26,16 @@ prune with one ``isin`` mask.
 Batch mode (``spark.read.format("txtable")``) is the head snapshot
 under the same machinery.
 
+Every decision about the log itself is TxTable's, called on a
+session-less handle (``TxTable(None, root)`` — manifest-level methods
+never touch Spark, so they run in the plan worker and in the writer's
+commit callback): the sink commits through ``TxTable._commit_new``,
+pushdown prunes through ``TxTable._files_within``, time travel
+resolves through ``snapshot``/``version_at``, and per-file stats take
+``txlog.stat_value``'s form.  This module keeps only what runs where
+no session exists: the pyarrow partition reader, the Arrow write
+tasks and the version-offset bookkeeping of the stream reader.
+
 Parity note: the reference polls a directory for new CSVs per run
 (fresh_picked_leads.py daily cadence); this source is that pattern
 with transactional, exactly-once bookkeeping.
@@ -47,56 +57,12 @@ from pyspark.sql.types import StructType
 
 from .. import txlog  # pure Python (no Spark session): safe to ship
 # to Python workers alongside this module
+from ..sources.txtable import _LOG_DIR, TxSnapshot, TxTable
 
-_LOG_DIR = "_txlog"  # mirrors sources/txtable.py
-
-_manifest_name = txlog.manifest_name
 _versions = txlog.versions
 # materialized view: delta-form manifests (r11 log checkpointing)
 # reconstruct transparently
 _manifest = txlog.load_manifest
-
-
-def _manifest_ts_us(log_dir: str, version: int) -> "int | None":
-    """Commit timestamp (epoch µs) of a version via the commit index
-    (r11) — heals pre-r10 manifests with the file-mtime fallback, the
-    same rule as TxTable._ts_of."""
-    return txlog.read_index(log_dir, [version]).get(version, {}).get("ts")
-
-
-def _parse_ts_us(value) -> int:
-    """User timestamp option -> epoch µs (ISO-8601 string, naive = UTC
-    like the engine session, or epoch seconds)."""
-    import datetime as _dt
-
-    s = str(value)
-    try:
-        return int(float(s) * 1_000_000)
-    except ValueError:
-        pass
-    dt = _dt.datetime.fromisoformat(s)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=_dt.timezone.utc)
-    return int(dt.timestamp() * 1_000_000)
-
-
-def _version_at_ts(log_dir: str, bound_us: int, root: str) -> int:
-    """Newest retained version committed at or before the bound —
-    TIMESTAMP AS OF resolution (ts is monotone over versions).  One
-    commit-index read, not a per-version manifest walk (r11)."""
-    vs = _versions(log_dir)
-    idx = txlog.read_index(log_dir, vs)
-    chosen = None
-    for v in vs:
-        ts = idx.get(v, {}).get("ts")
-        if ts is not None and ts <= bound_us:
-            chosen = v
-    if chosen is None:
-        raise FileNotFoundError(
-            f"timestampAsOf predates the earliest retained commit of "
-            f"{root}" + (f" (earliest version {vs[0]})" if vs else "")
-        )
-    return chosen
 
 
 @dataclass
@@ -223,27 +189,25 @@ def _read_file_partition(part: _FilePartition, logical: StructType):
     yield from tbl.to_batches(max_chunksize=1 << 16)
 
 
+def _phys_names(schema_json: str, colmap) -> list[str]:
+    """The physical column name of each logical field."""
+    phys = {c["name"]: c["phys"] for c in colmap or ()}
+    logical = StructType.fromJson(json.loads(schema_json))
+    return [phys.get(f.name, f.name) for f in logical.fields]
+
+
 def _partitions_for(
-    root: str, manifest: dict, files: list[str]
+    schema_json: str, colmap, dvs, files: list[str]
 ) -> list[_FilePartition]:
-    logical = StructType.fromJson(json.loads(manifest["schema"]))
-    colmap = manifest.get("colmap")
-    phys = (
-        {c["name"]: c["phys"] for c in colmap}
-        if colmap is not None
-        else {}
-    )
-    phys_names = [phys.get(f.name, f.name) for f in logical.fields]
-    dvs = manifest.get("dvs") or {}
+    phys_names = _phys_names(schema_json, colmap)
+    dvs = dvs or {}
     return [
         _FilePartition(f, phys_names, sorted(dvs.get(f, [])))
         for f in files
     ]
 
 
-def _cdf_partitions_for_step(
-    log_dir: str, root: str, v: int, labels: str = "simple"
-):
+def _cdf_partitions_for_step(log_dir: str, v: int, labels: str = "simple"):
     """Change partitions for ONE version step v-1 -> v, mirroring
     TxTable.read_changes semantics: added files -> inserts (live rows
     under the step's own vectors), removed files -> deletes under the
@@ -270,12 +234,16 @@ def _cdf_partitions_for_step(
     prev_dvs = (prev.get("dvs") or {}) if prev else {}
     out: list[_FilePartition] = []
     added = [f for f in cur["files"] if f not in prev_files]
-    for p in _partitions_for(root, cur, added):
+    for p in _partitions_for(
+        cur["schema"], cur.get("colmap"), cur.get("dvs"), added
+    ):
         p.change = ("update_postimage" if delta_update else "insert", v)
         out.append(p)
     if prev:
         removed = [f for f in prev["files"] if f not in set(cur["files"])]
-        for p in _partitions_for(root, prev, removed):
+        for p in _partitions_for(
+            prev["schema"], prev.get("colmap"), prev.get("dvs"), removed
+        ):
             p.change = ("delete", v)
             out.append(p)
         # fresh sidecar entries on carried files: exact row deletes
@@ -286,14 +254,7 @@ def _cdf_partitions_for_step(
             if not fresh or f not in prev_files:
                 continue
             if phys is None:
-                logical = StructType.fromJson(json.loads(cur["schema"]))
-                cm = cur.get("colmap")
-                pm = (
-                    {c["name"]: c["phys"] for c in cm}
-                    if cm is not None
-                    else {}
-                )
-                phys = [pm.get(fd.name, fd.name) for fd in logical.fields]
+                phys = _phys_names(cur["schema"], cur.get("colmap"))
             out.append(
                 _FilePartition(
                     f,
@@ -345,7 +306,7 @@ class _TxStreamReader(DataSourceStreamReader):
                     "txtable source: pass startingVersion OR "
                     "startingTimestamp, not both"
                 )
-            bound = _parse_ts_us(self.starting_timestamp)
+            bound = TxTable._to_epoch_us(self.starting_timestamp)
             vs = _versions(self.log_dir)
             idx = txlog.read_index(self.log_dir, vs)
             for v in vs:  # ts monotone: first match wins
@@ -389,7 +350,7 @@ class _TxStreamReader(DataSourceStreamReader):
                     p
                     for v in range(first, ev + 1)
                     for p in _cdf_partitions_for_step(
-                        self.log_dir, self.root, v, self.cdf_labels
+                        self.log_dir, v, self.cdf_labels
                     )
                 ]
                 return out or [_FilePartition("", [], [])]
@@ -407,7 +368,9 @@ class _TxStreamReader(DataSourceStreamReader):
         new_files = [f for f in head["files"] if f not in old_files]
         if not new_files:
             return [_FilePartition("", [], [])]
-        return _partitions_for(self.root, head, new_files)
+        return _partitions_for(
+            head["schema"], head.get("colmap"), head.get("dvs"), new_files
+        )
 
     def read(self, partition: _FilePartition):
         if not partition.file:
@@ -464,63 +427,28 @@ def _bounds_from_filters(filters) -> dict:
     return out
 
 
-def _prune_files_by_stats(manifest: dict, bounds: dict) -> list:
-    """Manifest-level file skipping for the batch reader — the
-    pure-Python mirror of TxTable.files_in_range: a file is skipped
-    only when its recorded [min, max] provably cannot intersect the
-    bound; files without stats (or with incomparable representations)
-    are admitted conservatively.  Date/timestamp stats JSON-serialize
-    as ISO strings, so non-string bounds compare via str() — lexical
-    order == temporal order for ISO forms (same rule as
-    TxTable._norm_bound)."""
-    files = list(manifest["files"])
-    stats = manifest.get("stats") or {}
-    if not bounds or not stats:
-        return files
-
-    def admit(fp: str) -> bool:
-        st = stats.get(fp)
-        if not st:
-            return True  # stat-less file: conservative
-        for col, (lo, hi) in bounds.items():
-            smin = (st.get("min") or {}).get(col)
-            smax = (st.get("max") or {}).get(col)
-            if smin is None or smax is None:
-                continue  # NULL-only or unrecorded column
-            if isinstance(smin, str):
-                lo = str(lo) if lo is not None and not isinstance(lo, str) else lo
-                hi = str(hi) if hi is not None and not isinstance(hi, str) else hi
-            try:
-                if lo is not None and smax < lo:
-                    return False
-                if hi is not None and smin > hi:
-                    return False
-            except TypeError:
-                continue  # incomparable: admit
-        return True
-
-    return [f for f in files if admit(f)]
-
-
 class _TxBatchReader(DataSourceReader):
     def __init__(
         self, root: str, schema: StructType, version: "int | None" = None
     ):
         self.root = root
-        self.log_dir = os.path.join(root, _LOG_DIR)
         self.logical = schema
         self.version = version  # pinned by versionAsOf / timestampAsOf
         self.bounds: dict = {}  # set by pushFilters (pushdown subclass)
 
     def partitions(self):
-        vs = _versions(self.log_dir)
-        if not vs:
+        t = TxTable(None, self.root)
+        snap = t.snapshot(self.version)
+        if snap is None:
             return [_FilePartition("", [], [])]
-        head = _manifest(self.log_dir, self.version or vs[-1])
-        files = _prune_files_by_stats(head, self.bounds)
+        # the engine's stats pruning (files_in_range semantics): a
+        # file is skipped only when its [min, max] provably misses a
+        # bound; stat-less files and unorderable bounds are admitted
+        keep = t._files_within(snap, self.bounds)
+        files = [f for f in snap.files if keep is None or f in keep]
         if not files:
             return [_FilePartition("", [], [])]
-        return _partitions_for(self.root, head, files)
+        return _partitions_for(snap.schema_json, snap.colmap, snap.dvs, files)
 
     def read(self, partition: _FilePartition):
         if not partition.file:
@@ -587,44 +515,31 @@ class TxTableDataSource(DataSource):
     def _pinned_version(self) -> "int | None":
         """Batch time travel (r10): versionAsOf / timestampAsOf pin a
         committed version; None = the head.  Mutually exclusive, like
-        Delta's reader options."""
+        Delta's reader options.  A versionAsOf outside the log raises
+        where the pinned snapshot is opened (``TxTable.snapshot``)."""
         v_opt = self.options.get("versionasof")
         ts_opt = self.options.get("timestampasof")
         if v_opt is not None and ts_opt is not None:
             raise ValueError(
                 "txtable: pass versionAsOf OR timestampAsOf, not both"
             )
-        log_dir = os.path.join(self._root(), _LOG_DIR)
-        if v_opt is not None:
-            v = int(v_opt)
-            vs = _versions(log_dir)
-            if v not in vs:
-                raise FileNotFoundError(
-                    f"version {v} of {self._root()} does not exist "
-                    + (f"(live: {vs[0]}..{vs[-1]})" if vs else "(empty log)")
-                )
-            return v
         if ts_opt is not None:
-            return _version_at_ts(
-                log_dir, _parse_ts_us(ts_opt), self._root()
-            )
-        return None
+            return TxTable(None, self._root()).version_at(ts_opt)
+        return None if v_opt is None else int(v_opt)
 
     def schema(self) -> StructType:
-        log_dir = os.path.join(self._root(), _LOG_DIR)
-        vs = _versions(log_dir)
-        if not vs:
+        # a pinned read carries the PINNED version's schema — time
+        # travel across an add_column must not NULL-fill forward
+        snap = TxTable(None, self._root()).snapshot(self._pinned_version())
+        if snap is None:
             raise FileNotFoundError(
                 f"no committed version under {self._root()}"
             )
-        # a pinned read carries the PINNED version's schema — time
-        # travel across an add_column must not NULL-fill forward
-        m = _manifest(log_dir, self._pinned_version() or vs[-1])
-        if not m.get("schema"):
+        if not snap.schema_json:
             raise ValueError(
                 "txtable source needs a schema-bearing manifest"
             )
-        base = StructType.fromJson(json.loads(m["schema"]))
+        base = StructType.fromJson(json.loads(snap.schema_json))
         if self._cdf():
             base = base.add("_change_type", "string").add(
                 "_commit_version", "long"
@@ -760,23 +675,6 @@ def _part_seg(phys: str, value) -> str:
     return f"__txp_{phys}={raw}"
 
 
-def _stat_py(v):
-    """JSON-native stat value (json.dumps(default=str) parity with
-    the engine: numpy scalars unwrap, dates/timestamps go ISO)."""
-    if v is None:
-        return None
-    try:
-        if v != v:
-            return None  # NaN/NaT
-    except Exception:
-        pass
-    if hasattr(v, "item"):
-        v = v.item()
-    if not isinstance(v, (int, float, str, bool)):
-        v = str(v)  # date/datetime: ISO, same as default=str
-    return v
-
-
 def _write_task(
     root: str,
     schema: StructType,
@@ -856,8 +754,8 @@ def _write_task(
         mins, maxs = {}, {}
         for c in scols:
             mm = pc.min_max(slice_tbl.column(phys.get(c, c)))
-            mins[c] = _stat_py(mm["min"].as_py())
-            maxs[c] = _stat_py(mm["max"].as_py())
+            mins[c] = txlog.stat_value(mm["min"].as_py())
+            maxs[c] = txlog.stat_value(mm["max"].as_py())
         return {"rows": slice_tbl.num_rows, "min": mins, "max": maxs}
 
     out_dir = os.path.join(root, "data", _uuid.uuid4().hex)
@@ -934,36 +832,30 @@ def _write_task(
     return _WroteFiles(sorted(files), tbl.num_rows, hsum, stats)
 
 
-def _head_version_and_manifest(log_dir: str):
-    # index-hint + forward-probe head discovery (txlog, VERDICT r11
-    # #4) — flat in retained version count, listdir only as fallback
-    return txlog.head_version_and_manifest(log_dir)
-
-
 def _sink_guards(
-    m: dict | None,
+    base: "TxSnapshot | None",
     schema: StructType,
     op: str,
     check_schema: bool = True,
 ) -> None:
-    """The native sink is manifest-only on the driver (no Spark
-    session in the commit callback), so table features whose
-    enforcement needs a query engine are refused LOUDLY instead of
-    silently skipped.  ``check_schema=False`` for overwrite, which
-    legitimately replaces the schema but must still refuse
-    constraints/colmap (silently DROPPING a CHECK constraint or
+    """The native sink commits without a Spark session (its Arrow
+    tasks wrote the files, the commit is manifest-only), so table
+    features whose enforcement needs a query engine are refused
+    LOUDLY instead of silently skipped.  ``check_schema=False`` for
+    overwrite, which legitimately replaces the schema but must still
+    refuse constraints/colmap (silently DROPPING a CHECK constraint or
     breaking the physical-name contract would be worse than the
     append-path refusal)."""
-    if m is None:
+    if base is None:
         return
-    if m.get("constraints"):
+    if base.constraints:
         raise ValueError(
             f"txtable {op}: target carries CHECK constraints, which "
             "this sink cannot validate — use txtable_sink_prepared "
             "(streaming/sinks.py, foreachBatch + engine-assisted "
             "append) for gated tables"
         )
-    if m.get("generated"):
+    if base.generated:
         raise ValueError(
             f"txtable {op}: target declares generated columns, which "
             "this sink cannot compute/validate — use "
@@ -971,16 +863,16 @@ def _sink_guards(
         )
     # partitioned targets are SUPPORTED since r13: tasks lay out
     # __txp_<phys>=<value> splits in the Arrow writer (_write_task)
-    if m.get("identity"):
+    if base.identity:
         # id assignment needs the engine's transactional watermark
         # bookkeeping (per-partition offset blocks under the pin) —
         # there is no sound manifest-only spelling of it
         raise ValueError(
             f"txtable {op}: target has identity column "
-            f"{m['identity']['col']!r}, which this sink cannot assign "
+            f"{base.identity['col']!r}, which this sink cannot assign "
             "— use txtable_sink_prepared (streaming/sinks.py)"
         )
-    if m.get("colmap") is not None and not check_schema:
+    if base.colmap is not None and not check_schema:
         # overwrite replaces the schema: the retired-name fence and
         # field-id bookkeeping need the engine — refuse.  Appends into
         # column-mapped tables are supported since r10: the writer
@@ -991,8 +883,8 @@ def _sink_guards(
         )
     if not check_schema:
         return
-    if m.get("schema"):
-        want = StructType.fromJson(json.loads(m["schema"]))
+    if base.schema_json:
+        want = StructType.fromJson(json.loads(base.schema_json))
         if [
             (f.name, f.dataType.simpleString()) for f in want.fields
         ] != [(f.name, f.dataType.simpleString()) for f in schema.fields]:
@@ -1003,131 +895,63 @@ def _sink_guards(
             )
 
 
-def _commit_append(
+def _sink_commit(
     root: str,
     schema: StructType,
     files: list[str],
     txn: str | None,
     op: str = "stream_sink",
     overwrite: bool = False,
-    max_retries: int = 20,
     wrote_colmap=None,
     wrote_pby=None,
-    new_stats: dict | None = None,
+    stats: dict | None = None,
 ) -> int:
-    """Driver-side manifest append — TxTable._commit's protocol
-    (fsync temp + atomic-exclusive os.link) in pure Python.  Blind
-    appends commute, so a lost race re-reads the head and re-links;
-    guards re-run each attempt (a racing add_constraint must refuse
-    us).  ``txn`` makes the commit exactly-once per tag.
-    ``wrote_colmap`` is the mapping the TASKS renamed under (captured
-    at stream start): a rename landing mid-stream makes the staged
-    files speak stale physical names, so the commit refuses instead
-    of linking them (restart the stream to adopt the new mapping).
+    """Commit the tasks' ``files`` (with their per-file ``stats``)
+    through TxTable's one new-file commit, ``_commit_new``, on a
+    session-less handle: the same manifest, retry loop and ``txn``
+    exactly-once check as ``TxTable.append``/``overwrite``.  The
+    sink's guards re-run against every base it commits on (a racing
+    add_constraint must refuse us).  ``wrote_colmap``/``wrote_pby``
+    are the mapping and partition spec the TASKS wrote under
+    (captured at stream start): a rename landing mid-stream makes the
+    staged files speak stale physical names, and files laid out under
+    another spec would break file-per-partition-value, so the commit
+    refuses instead of linking them (restart the stream to adopt the
+    new state)."""
+    t = TxTable(None, root)
 
-    Per-trigger cost (r11): the txn-idempotency check reads the
-    cached commit index (one sequential read + suffix parses across a
-    stream's life), and the manifest writes delta-form when the
-    append is small relative to the table — the two O(history) /
-    O(table) terms VERDICT r10 flagged in exactly this code path."""
-    log_dir = os.path.join(root, _LOG_DIR)
-    os.makedirs(log_dir, exist_ok=True)
-    for _ in range(max_retries + 1):
-        head_v, m = _head_version_and_manifest(log_dir)
-        _sink_guards(m, schema, op, check_schema=not overwrite)
-        head_cm = m.get("colmap") if (m and not overwrite) else None
-        if head_cm != wrote_colmap:
+    def recheck(base: "TxSnapshot | None") -> None:
+        _sink_guards(base, schema, op, check_schema=not overwrite)
+        if (None if overwrite else t._colmap_or_none(base)) != wrote_colmap:
             raise ValueError(
                 f"txtable {op}: the table's column mapping changed "
                 "since this stream started (files were written under "
                 "the old physical names) — restart the stream"
             )
-        head_pby = (m.get("partition_by") or None) if m else None
-        if head_pby != (wrote_pby or None):
+        if _spec_of(base) != (wrote_pby or None):
             # the spec is immutable at CREATE, so this only fires when
-            # the table was dropped+recreated under the stream — but
-            # linking files laid out under the WRONG spec would break
-            # the file-per-partition-value invariant silently
+            # the table was dropped+recreated under the stream
             raise ValueError(
                 f"txtable {op}: the table's partition spec changed "
                 "since this stream started — restart the stream"
             )
-        if txn is not None and m is not None:
-            # heal=True: the sink holds write intent here, matching
-            # TxTable._committed_txns — a hole-y log heals once
-            # instead of re-materializing every trigger (ADVICE r12)
-            idx = txlog.read_index(log_dir, _versions(log_dir), heal=True)
-            if txn in {e.get("txn") for e in idx.values()}:
-                return head_v  # replayed batch: already landed
-        carried = list(m["files"]) if (m and not overwrite) else []
-        # commit timestamp parity with TxTable._commit (r10): monotone
-        # epoch µs so TIMESTAMP AS OF / retain_hours see sink commits
-        import time as _time
 
-        parent_ts = m.get("ts") if m else None
-        if parent_ts is None and m is not None:
-            parent_ts = _manifest_ts_us(log_dir, head_v)
-        now_us = int(_time.time() * 1_000_000)
-        ts = now_us if parent_ts is None else max(parent_ts + 1, now_us)
-        stats = (
-            {
-                f: m["stats"][f]
-                for f in carried
-                if m.get("stats") and f in m["stats"]
-            }
-            if m
-            else {}
-        )
-        if new_stats:
-            # per-file rows/min/max the Arrow tasks computed (r13):
-            # sink-written files are now prunable like engine-written
-            # ones — on partitioned targets the spec columns are
-            # single-valued per file, so partition pruning holds
-            stats.update(
-                {f: new_stats[f] for f in files if f in new_stats}
-            )
-        manifest = {
-            "version": head_v + 1,
-            "op": op,
-            "ts": ts,
-            "files": carried + files,
-            "txn": txn,
-            "schema": json.dumps(schema.jsonValue()),
-            "stats": stats or None,
-            "dropped": list(m.get("dropped") or []) if m else [],
-        }
-        if m and m.get("stats_cols"):
-            manifest["stats_cols"] = m["stats_cols"]
-        if m and m.get("partition_by"):
-            # the spec is a table property: immutable, rides every
-            # commit (append AND overwrite) exactly as in the engine
-            manifest["partition_by"] = m["partition_by"]
-        if m and not overwrite and m.get("dvs"):
-            manifest["dvs"] = m["dvs"]  # all carried files still live
-        if m and not overwrite and m.get("colmap") is not None:
-            # identity-only by guard; carry the mapping metadata
-            manifest["colmap"] = m["colmap"]
-            manifest["retired_phys"] = m.get("retired_phys") or []
-            manifest["max_id"] = m.get("max_id")
-        try:
-            txlog.write_manifest(
-                log_dir,
-                manifest,
-                parent_files=(m["files"] if m and not overwrite else None),
-                parent_stats=(
-                    m.get("stats") if m and not overwrite else None
-                ),
-                parent_chain=(
-                    m.get("chain", 0) if m and not overwrite else 0
-                ),
-                parent_dvs=(
-                    m.get("dvs") if m and not overwrite else None
-                ),
-            )
-            return head_v + 1
-        except FileExistsError:
-            continue  # lost the race: retry against the new head
-    raise RuntimeError(f"txtable sink: lost {max_retries} commit races")
+    base = t.snapshot()
+    recheck(base)
+    return t._commit_new(
+        files,
+        op,
+        base,
+        txn,
+        stats,
+        recheck,
+        replace=overwrite,
+        schema_json=json.dumps(schema.jsonValue()),
+    )
+
+
+def _spec_of(base: "TxSnapshot | None") -> "list[str] | None":
+    return list(base.partition_by) if base and base.partition_by else None
 
 
 def _require_spec_cols(pby, schema: StructType, op: str) -> None:
@@ -1144,17 +968,69 @@ def _require_spec_cols(pby, schema: StructType, op: str) -> None:
         )
 
 
-def _abort_cleanup(messages) -> None:
-    import shutil
+class _TxSinkWriter:
+    """What both sink writers share: the head read at plan time (fail
+    fast at stream start, not first commit), the Arrow task, and the
+    commit of the tasks' files in ONE manifest (``_sink_commit``)."""
 
-    for msg in messages:
-        if not msg:
-            continue
-        for f in msg.files:
-            shutil.rmtree(os.path.dirname(f), ignore_errors=True)
+    def __init__(self, root: str, schema: StructType, op: str, overwrite=False):
+        self.root = root
+        self.schema = schema
+        self.op = op
+        self.overwrite = overwrite
+        base = TxTable(None, root).snapshot()
+        _sink_guards(base, schema, op, check_schema=not overwrite)
+        # the mapping every task writes under for the stream's life (a
+        # mid-stream rename is refused at commit); overwrite replaces
+        # the schema, so it writes logical names
+        self.colmap = None if overwrite else TxTable._colmap_or_none(base)
+        # partition spec + stats columns (r13): tasks lay out the
+        # __txp_ value splits and compute per-file stats themselves —
+        # in BOTH modes, since the spec is immutable and overwrite's
+        # replacement files must be laid out under it
+        self.pby = _spec_of(base)
+        self.stats_cols = (
+            list(base.stats_cols) if base and base.stats_cols else None
+        )
+        _require_spec_cols(self.pby, schema, op)
+
+    def write(self, iterator):
+        return _write_task(
+            self.root,
+            self.schema,
+            iterator,
+            self.colmap,
+            self.pby,
+            self.stats_cols,
+        )
+
+    def _commit_files(self, messages, txn: str | None) -> int:
+        msgs = [m for m in messages if m]
+        return _sink_commit(
+            self.root,
+            self.schema,
+            sorted(f for m in msgs for f in m.files),
+            txn,
+            op=self.op,
+            overwrite=self.overwrite,
+            wrote_colmap=self.colmap,
+            wrote_pby=self.pby,
+            stats={f: st for m in msgs for f, st in m.stats.items()},
+        )
+
+    def abort(self, messages, batchId: "int | None" = None) -> None:
+        """An aborted write leaves only its staged, unreferenced
+        directories; remove them (vacuum would, after its min age)."""
+        import shutil
+
+        for msg in messages:
+            if not msg:
+                continue
+            for f in msg.files:
+                shutil.rmtree(os.path.dirname(f), ignore_errors=True)
 
 
-class _TxStreamWriter(DataSourceStreamArrowWriter):
+class _TxStreamWriter(_TxSinkWriter, DataSourceStreamArrowWriter):
     """Streaming sink: every micro-batch commits ONE manifest
     appending all task files, tagged with an order-insensitive
     CONTENT fingerprint (row count + summed row hashes) — a replayed
@@ -1164,99 +1040,22 @@ class _TxStreamWriter(DataSourceStreamArrowWriter):
     or drop under re-splits, the r8-reviewed hazard)."""
 
     def __init__(self, root: str, schema: StructType):
-        self.root = root
-        self.schema = schema
-        # fail fast at stream start, not first commit
-        m = _head_version_and_manifest(os.path.join(root, _LOG_DIR))[1]
-        _sink_guards(m, schema, "stream_sink")
-        # the mapping every task writes under for the stream's life;
-        # a mid-stream rename is refused at commit (_commit_append)
-        self.colmap = m.get("colmap") if m else None
-        # partition spec + stats columns (r13): tasks lay out the
-        # __txp_ value splits and compute per-file stats themselves
-        self.pby = (m.get("partition_by") or None) if m else None
-        self.stats_cols = (m.get("stats_cols") or None) if m else None
-        _require_spec_cols(self.pby, schema, "stream_sink")
-
-    def write(self, iterator):
-        return _write_task(
-            self.root,
-            self.schema,
-            iterator,
-            self.colmap,
-            self.pby,
-            self.stats_cols,
-        )
+        super().__init__(root, schema, "stream_sink")
 
     def commit(self, messages, batchId: int) -> None:
-        files = sorted(f for msg in messages if msg for f in msg.files)
         n = sum(msg.n_rows for msg in messages if msg)
         h = sum(msg.row_hash_sum for msg in messages if msg) % (1 << 64)
-        stats: dict = {}
-        for msg in messages:
-            if msg:
-                stats.update(msg.stats)
-        _commit_append(
-            self.root,
-            self.schema,
-            files,
-            txn=f"txsink|{n}:{h}",
-            wrote_colmap=self.colmap,
-            wrote_pby=self.pby,
-            new_stats=stats,
-        )
-
-    def abort(self, messages, batchId: int) -> None:
-        _abort_cleanup(messages)
+        self._commit_files(messages, f"txsink|{n}:{h}")
 
 
-class _TxBatchWriter(DataSourceArrowWriter):
+class _TxBatchWriter(_TxSinkWriter, DataSourceArrowWriter):
     """Batch sink: ``df.write.format("txtable").mode("append"|
     "overwrite")`` — all task files land in ONE atomic manifest."""
 
     def __init__(self, root: str, schema: StructType, overwrite: bool):
-        self.root = root
-        self.schema = schema
-        self.overwrite = overwrite
-        self.colmap = None
-        # the head manifest is read in BOTH modes since r13: overwrite
-        # replaces the rows but the partition spec is immutable and the
-        # replacement files must be laid out under it
-        m = _head_version_and_manifest(os.path.join(root, _LOG_DIR))[1]
-        _sink_guards(m, schema, "batch_sink", check_schema=not overwrite)
-        if not overwrite:  # append must match; overwrite replaces
-            self.colmap = m.get("colmap") if m else None
-        self.pby = (m.get("partition_by") or None) if m else None
-        self.stats_cols = (m.get("stats_cols") or None) if m else None
-        _require_spec_cols(self.pby, schema, "batch_sink")
-
-    def write(self, iterator):
-        return _write_task(
-            self.root,
-            self.schema,
-            iterator,
-            self.colmap,
-            self.pby,
-            self.stats_cols,
+        super().__init__(
+            root, schema, "overwrite" if overwrite else "append", overwrite
         )
 
     def commit(self, messages) -> None:
-        files = sorted(f for msg in messages if msg for f in msg.files)
-        stats: dict = {}
-        for msg in messages:
-            if msg:
-                stats.update(msg.stats)
-        _commit_append(
-            self.root,
-            self.schema,
-            files,
-            txn=None,
-            op="overwrite" if self.overwrite else "append",
-            overwrite=self.overwrite,
-            wrote_colmap=self.colmap,
-            wrote_pby=self.pby,
-            new_stats=stats,
-        )
-
-    def abort(self, messages) -> None:
-        _abort_cleanup(messages)
+        self._commit_files(messages, None)

@@ -60,6 +60,32 @@ def manifest_name(version: int) -> str:
     return f"v{version:010d}.json"
 
 
+def stat_value(v):
+    """The one stored form of a per-file min/max stat, used by every
+    writer and by every bound compared against one.  numpy scalars
+    unwrap, NaN/NaT records no bound, and values JSON cannot hold go
+    through ``str()`` — dates/timestamps become ISO strings, whose
+    lexical order is temporal order.  A tz-aware timestamp is first
+    taken to naive UTC, the form a UTC Spark session collects, so an
+    Arrow-written file and a Spark-written one store the same string."""
+    import datetime
+
+    if v is None:
+        return None
+    try:
+        if v != v:
+            return None  # NaN/NaT
+    except Exception:
+        pass
+    if hasattr(v, "item"):
+        v = v.item()
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    if not isinstance(v, (int, float, str, bool)):
+        v = str(v)
+    return v
+
+
 def versions(log_dir: str) -> list[int]:
     if not os.path.isdir(log_dir):
         return []

@@ -368,9 +368,9 @@ def test_two_writers_conflict_retry_exactly_once(spark, tmp_path):
     assert t.snapshot().version == 3  # create + two appends, no dupes
 
 
-def test_append_conflict_exhaustion_surfaces(spark, tmp_path):
-    """max_retries=0 restores the old surface-the-conflict behavior —
-    the bounded loop cannot spin forever."""
+def test_append_conflict_exhaustion_surfaces(spark, tmp_path, monkeypatch):
+    """Zero commit retries restore the old surface-the-conflict
+    behavior — the bounded loop cannot spin forever."""
     root = str(tmp_path / "t")
     t = TxTable.create(spark, root, _mkdf(spark, [(0, "base")]))
 
@@ -381,15 +381,13 @@ def test_append_conflict_exhaustion_surfaces(spark, tmp_path):
             TxTable(spark, root).append(_mkdf(spark, [(9, "x")]))
             return snap
 
+    monkeypatch.setattr(TxTable, "_COMMIT_RETRIES", 0)
     with pytest.raises(TxConflictError):
-        StaleTable(spark, root).append(
-            _mkdf(spark, [(1, "a")]), max_retries=0
-        )
-    # and the bounded default gives up rather than spinning
+        StaleTable(spark, root).append(_mkdf(spark, [(1, "a")]))
+    # and a bounded retry count gives up rather than spinning
+    monkeypatch.setattr(TxTable, "_COMMIT_RETRIES", 2)
     with pytest.raises(TxConflictError):
-        StaleTable(spark, root).append(
-            _mkdf(spark, [(2, "b")]), max_retries=2
-        )
+        StaleTable(spark, root).append(_mkdf(spark, [(2, "b")]))
 
 
 def test_compact_trivial_table_guard(spark, tmp_path):

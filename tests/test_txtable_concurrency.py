@@ -189,7 +189,7 @@ def test_merge_vs_disjoint_merge_refuses_then_reinvokes(spark, tmp_path):
 
 def test_mutation_vs_append_storm_retries_to_success(spark, tmp_path):
     """Several appends landing during ONE mutation's commit window:
-    the retry loop absorbs each (bounded by max_retries) and every
+    the retry loop absorbs each (bounded by _COMMIT_RETRIES) and every
     writer's rows land exactly once."""
     root = str(tmp_path / "t")
     TxTable.create(spark, root, _df(spark, BASE))
@@ -510,7 +510,7 @@ def test_update_range_matches_update_and_prunes(spark, tmp_path):
 
 
 def test_sink_commit_races_engine_append_both_land(spark, tmp_path):
-    """The native sink's driver-side commit (_commit_append) vs a
+    """The native sink's driver-side commit (_sink_commit) vs a
     racing ENGINE append on the same partitioned table: the sink's
     blind append must retry against the new head and land WITHOUT
     dropping the racer's files, the partition spec, or either side's
@@ -556,13 +556,13 @@ def test_sink_commit_races_engine_append_both_land(spark, tmp_path):
 
     src.txlog.write_manifest = racing_write
     try:
-        v = src._commit_append(
+        v = src._sink_commit(
             root,
             base.schema,
             [path],
             txn="race-sink-1",
             wrote_pby=["p"],
-            new_stats=stats,
+            stats=stats,
         )
     finally:
         src.txlog.write_manifest = real
@@ -577,8 +577,8 @@ def test_sink_commit_races_engine_append_both_land(spark, tmp_path):
     racer_files = [f for f in snap.files if f != path]
     assert all(f in snap.stats for f in racer_files)
     # replaying the sink txn no-ops
-    v2 = src._commit_append(
+    v2 = src._sink_commit(
         root, base.schema, [path], txn="race-sink-1",
-        wrote_pby=["p"], new_stats=stats,
+        wrote_pby=["p"], stats=stats,
     )
     assert v2 == 3 and TxTable(spark, root).read().count() == 4

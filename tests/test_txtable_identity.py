@@ -219,7 +219,6 @@ def test_concurrent_identity_appends_never_collide(spark, tmp_path):
 
 
 def test_identity_sink_guard_refuses(spark, tmp_path):
-    from etl_pipeline_fresh_picked_leads_spark import txlog
     from etl_pipeline_fresh_picked_leads_spark.streaming.txtable_source import (
         _sink_guards,
     )
@@ -227,9 +226,8 @@ def test_identity_sink_guard_refuses(spark, tmp_path):
     t = TxTable.create(
         spark, str(tmp_path / "t"), _df(spark, 0, 5), identity="row_id"
     )
-    m = txlog.load_manifest(t.log_dir, t.snapshot().version)
     with pytest.raises(ValueError, match="identity"):
-        _sink_guards(m, t.read().drop("row_id").schema, "append")
+        _sink_guards(t.snapshot(), t.read().drop("row_id").schema, "append")
 
 
 def test_streaming_prepared_sink_assigns_ids_exactly_once(

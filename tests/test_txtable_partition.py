@@ -620,14 +620,14 @@ def test_sink_commit_refuses_mid_stream_spec_change(spark, tmp_path):
     _sh.rmtree(os.path.join(root, "_txlog"))
     TxTable.create(spark, root, df)
     with pytest.raises(ValueError, match="partition spec changed"):
-        src._commit_append(
+        src._sink_commit(
             root, df.schema, [path], txn=None, wrote_pby=["p"]
         )
     # and the reverse: spec appeared under an unpartitioned stream
     root2 = str(tmp_path / "u")
     TxTable.create(spark, root2, df, partition_by=["p"])
     with pytest.raises(ValueError, match="partition spec changed"):
-        src._commit_append(
+        src._sink_commit(
             root2, df.schema, [path], txn=None, wrote_pby=None
         )
 

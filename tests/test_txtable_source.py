@@ -271,11 +271,11 @@ def test_sink_append_into_column_mapped_table(reg, tmp_path):
     assert got[10] == 99.0 and len(got) == 5
     # a rename landing after files were staged refuses at commit
     from etl_pipeline_fresh_picked_leads_spark.streaming.txtable_source import (
-        _commit_append,
+        _sink_commit,
     )
 
     with pytest.raises(ValueError, match="column mapping changed"):
-        _commit_append(
+        _sink_commit(
             root, t._current_schema(t.snapshot()), [], txn=None,
             wrote_colmap=None,
         )
@@ -358,7 +358,7 @@ def test_sink_commit_retries_lost_append_race(reg, tmp_path):
     import json as _json
 
     from etl_pipeline_fresh_picked_leads_spark.streaming.txtable_source import (
-        _commit_append,
+        _sink_commit,
         _WroteFiles,
     )
 
@@ -382,12 +382,12 @@ def test_sink_commit_retries_lost_append_race(reg, tmp_path):
     )
     # racer lands version 2 first
     t.append(_df(spark, 100, 101).coalesce(1))
-    v = _commit_append(root, t.read().schema, [f], txn="txsink|race")
+    v = _sink_commit(root, t.read().schema, [f], txn="txsink|race")
     assert v == 3, "sink re-linked against the racer's head"
     got = sorted(r.k for r in TxTable(spark, root).read().collect())
     assert got == [0, 1, 2, 3, 4, 9, 100]
     # idempotent under the tag
-    assert _commit_append(root, t.read().schema, [f], txn="txsink|race") == 3
+    assert _sink_commit(root, t.read().schema, [f], txn="txsink|race") == 3
 
 
 def test_sink_overwrite_refuses_constrained_or_mapped_tables(reg, tmp_path):
@@ -696,3 +696,103 @@ def test_batch_reader_manifest_stats_file_skipping(reg, tmp_path):
         .count()
         == 0
     )
+    # decimal and timestamp stats columns: pruning must agree with the
+    # engine's own read, never drop a matching file
+    import datetime as _dt
+    from decimal import Decimal
+
+    def same_as_engine(tbl, where):
+        got = (
+            spark.read.format("txtable")
+            .option("path", tbl.root)
+            .load()
+            .filter(where)
+            .collect()
+        )
+        want = tbl.read().filter(where).collect()
+        assert sorted(got) == sorted(want) and want, where
+
+    dec = "k bigint, d decimal(10,2)"
+    td = TxTable.create(
+        spark,
+        str(tmp_path / "dec"),
+        spark.createDataFrame(
+            [(1, Decimal("9.50")), (2, Decimal("10.00"))], dec
+        ).coalesce(1),
+        stats_cols=["d"],
+    )
+    td.append(
+        spark.createDataFrame(
+            [(3, Decimal("1.00")), (4, Decimal("1.50"))], dec
+        ).coalesce(1)
+    )
+    same_as_engine(td, "d >= 2")
+    ts = "k bigint, t timestamp"
+    day = [_dt.datetime(2024, 1, d) for d in (1, 2, 3, 4)]
+    tt = TxTable.create(
+        spark,
+        str(tmp_path / "ts"),
+        spark.createDataFrame([(1, day[0]), (2, day[1])], ts).coalesce(1),
+        stats_cols=["t"],
+    )
+    tt.append(
+        spark.createDataFrame([(3, day[2]), (4, day[3])], ts).coalesce(1)
+    )
+    same_as_engine(tt, "t = timestamp'2024-01-02 00:00:00'")
+    same_as_engine(tt, "t >= timestamp'2024-01-02 00:00:00'")
+
+
+def test_sink_and_engine_append_record_equal_stats(reg, tmp_path):
+    """The same rows appended by TxTable.append and by the native
+    format("txtable") writer record equal manifest stats for every
+    stats column type, so engine pruning (update's read set,
+    read_range) sees a sink-written file exactly like its own."""
+    import datetime as _dt
+    from decimal import Decimal
+
+    spark = reg
+    ddl = "k int, s string, dt date, t timestamp, d decimal(10,2)"
+    x = _dt.datetime(2024, 2, 1)
+
+    def rows(keys):
+        return spark.createDataFrame(
+            [
+                (
+                    k,
+                    f"s{k}",
+                    _dt.date(2024, 1, k),
+                    x + _dt.timedelta(days=k - 3),
+                    Decimal(f"{k}.50"),
+                )
+                for k in keys
+            ],
+            ddl,
+        ).coalesce(1)
+
+    def table(name):
+        return TxTable.create(
+            spark,
+            str(tmp_path / name),
+            rows([1, 2]),
+            stats_cols=["k", "s", "dt", "t", "d"],
+        )
+
+    def new_file_stats(t, before):
+        snap = t.snapshot()
+        (f,) = [f for f in snap.files if f not in before]
+        return snap.stats[f]
+
+    eng = table("eng")
+    before = set(eng.snapshot().files)
+    eng.append(rows([3, 4]))
+    sink = table("sink")
+    sinked = set(sink.snapshot().files)
+    rows([3, 4]).write.format("txtable").mode("append").option(
+        "path", sink.root
+    ).save()
+    assert new_file_stats(sink, sinked) == new_file_stats(eng, before)
+    # x is the sink file's min: its stats must admit the bound
+    assert sorted(r.k for r in sink.read_range("t", None, x).collect()) == [
+        1, 2, 3,
+    ]
+    assert sink.update(F.col("t") == F.lit(x), {"s": F.lit("hit")}) == 1

@@ -54,7 +54,8 @@ def instrument():
 
     T = tx.TxTable
     for m in [
-        "_write_data", "_stats_for", "_commit", "append", "read",
+        "_write_data", "_stats_for", "_commit", "_commit_new", "append",
+        "read",
         "_scan", "_affected", "_mutate", "merge",
         "update", "delete", "replace_where", "delete_dv", "update_dv",
         "compact", "read_changes", "_validate_constraints",
