@@ -30,7 +30,6 @@ class EngineConfig:
     testdata_dir: str = field(
         default_factory=lambda: _env("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
-    cpus: str = field(default_factory=lambda: _env("SPARK_GRAFT_CPUS", "32"))
     log_file: str | None = field(
         default_factory=lambda: os.environ.get("FPL_LOG_FILE")
     )

@@ -127,7 +127,8 @@ def _parallel(docs: DataFrame) -> DataFrame:
             return docs
         if files:
             import os as _os
-            from urllib.parse import unquote, urlparse
+
+            from .. import txlog
 
             mpb = _parse_bytes(
                 docs.sparkSession.conf.get(
@@ -136,7 +137,7 @@ def _parallel(docs: DataFrame) -> DataFrame:
                 )
             )
             total = sum(
-                _os.path.getsize(unquote(urlparse(f).path)) for f in files
+                _os.path.getsize(txlog.manifest_path(f)) for f in files
             )
             if max(len(files), -(-total // mpb)) >= floor:
                 return docs

@@ -172,6 +172,25 @@ class TxSnapshot:
     # commit like constraints, and scopes compact()/vacuum()
     # maintenance to one partition.
 
+    # The per-file read facts: pure manifest arithmetic, so the Spark
+    # scan (``TxTable._scan``) and the pyarrow partition reader of the
+    # ``format("txtable")`` source plan from the same answers.
+
+    def phys_names(self) -> dict:
+        """``{logical field: physical parquet column}`` in schema order:
+        the colmap's name, else the logical name itself."""
+        phys = {c["name"]: c["phys"] for c in self.colmap or ()}
+        return {
+            f["name"]: phys.get(f["name"], f["name"])
+            for f in json.loads(self.schema_json)["fields"]
+        }
+
+    def dvs_for(self, files) -> dict:
+        """``{file: [DV sidecar paths]}`` for the files among ``files``
+        that carry live deletion vectors in this snapshot."""
+        dvs = self.dvs or {}
+        return {f: dvs[f] for f in files if f in dvs}
+
 
 def _manifest_name(version: int) -> str:
     return f"v{version:010d}.json"
@@ -186,6 +205,17 @@ class _Effect(NamedTuple):
     cdf: DataFrame | None = None  # exact changes, + _change_type
     dv: DataFrame | None = None  # (_fp, _pos) rows to deletion-vector
     op: str | None = None  # manifest op, when not the mutation's own
+
+
+class _Step(NamedTuple):
+    """One read of a change-feed plan (``TxTable._change_steps``)."""
+
+    version: int  # the commit: every row's _commit_version
+    snap: TxSnapshot  # the state ``files`` are read under
+    files: list  # data files; CDF sidecar paths when dv == "cdf"
+    tag: str | None  # every row's _change_type; None = the sidecar's
+    dv: str  # "cdf": read the sidecars verbatim; "anti": subtract
+    # snap's vectors; "semi": keep only the rows snap's vectors name
 
 
 class TxTable:
@@ -480,8 +510,7 @@ class TxTable:
         from pyspark.sql.types import StructField, StructType
 
         files = list(snap.files) if files is None else list(files)
-        dvs = snap.dvs or {}
-        live = {f: dvs[f] for f in files if f in dvs}
+        live = snap.dvs_for(files)
         want = [m for m in ("fp", "pos") if m in meta or live]
         if want and snap.schema_json is not None:
             fields = {
@@ -498,20 +527,18 @@ class TxTable:
                 schema = schema.add(*self._META[m][1:])
             return self.spark.createDataFrame([], schema)
         reader = self.spark.read
-        logical = phys = None
+        phys = None  # physical names, when any differs from its field's
         if snap.schema_json is not None:
             logical = StructType.fromJson(json.loads(snap.schema_json))
-            cm = self._colmap_or_none(snap)
-            if not self._is_identity(cm):
-                phys = {c["name"]: c["phys"] for c in cm}
+            phys = snap.phys_names()
+            if all(n == p for n, p in phys.items()):
+                phys = None
             reader = reader.schema(
                 logical
                 if phys is None
                 else StructType(
                     [
-                        StructField(
-                            phys.get(f.name, f.name), f.dataType, f.nullable
-                        )
+                        StructField(phys[f.name], f.dataType, f.nullable)
                         for f in logical.fields
                     ]
                 )
@@ -523,7 +550,7 @@ class TxTable:
         if phys is not None:
             df = df.select(
                 *[
-                    F.col(phys.get(f.name, f.name)).alias(f.name)
+                    F.col(phys[f.name]).alias(f.name)
                     for f in logical.fields
                 ],
                 *[F.col(self._META[m][1]) for m in want],
@@ -608,8 +635,9 @@ class TxTable:
 
     @staticmethod
     def _norm_fp() -> Column:
-        """``_metadata.file_path`` is a URI (``file:/x`` or
-        ``file:///x``); manifests and DV sidecars store plain paths."""
+        """``_metadata.file_path`` (a ``file:/x`` or ``file:///x`` URI)
+        without its scheme, still %-encoded: the DV sidecars' ``file``
+        form (``txlog.manifest_path`` gives the manifest's)."""
         return F.regexp_replace(F.col("_fp"), "^file:(//)?", "")
 
     def _dv_join(self, scanned: DataFrame, paths, how: str) -> DataFrame:
@@ -1201,8 +1229,6 @@ class TxTable:
         one aggregate scan grouped by source file.  Stats are keyed by
         LOGICAL name; the aggregation reads the physical columns when
         a colmap is in force."""
-        from urllib.parse import unquote, urlparse
-
         if not files or not self.stats_cols:
             return {}
         phys = {c["name"]: c["phys"] for c in (colmap or [])}
@@ -1222,11 +1248,7 @@ class TxTable:
             aggs += [F.min(pc).alias(f"_min_{c}"), F.max(pc).alias(f"_max_{c}")]
         out = {}
         for r in df.groupBy("_fp").agg(*aggs).collect():
-            # _metadata.file_path is URI-encoded: a partition dir with
-            # an escapable char (__txp_c=north region -> north%20region)
-            # must decode back to the OS path the manifest lists, or
-            # the file's stats land under a key no read ever matches
-            out[unquote(urlparse(r._fp).path)] = {
+            out[txlog.manifest_path(r._fp)] = {
                 "rows": r._rows,
                 "min": {c: txlog.stat_value(r[f"_min_{c}"]) for c in cols},
                 "max": {c: txlog.stat_value(r[f"_max_{c}"]) for c in cols},
@@ -1977,14 +1999,14 @@ class TxTable:
         )
 
     def read_since(self, version: int, until: int | None = None) -> DataFrame:
-        """Rows in files ADDED after ``version`` — incremental
-        consumption without reprocessing the table (the append-only
-        core of a change-data-feed).  Exact for append/compact-only
-        history; an intervening update/upsert rewrites whole files, so
-        carried-along unchanged rows of those files appear too — an
-        over-approximation, never a miss.  Downstream incremental
-        consumers dedup on their own key, same contract as replaying
-        an at-least-once feed.
+        """Rows in files ADDED after ``version`` (0: since before the
+        first commit) — incremental consumption without reprocessing
+        the table (the append-only core of a change-data-feed).  Exact
+        for append/compact-only history; an intervening update/upsert
+        rewrites whole files, so carried-along unchanged rows of those
+        files appear too — an over-approximation, never a miss.
+        Downstream incremental consumers dedup on their own key, same
+        contract as replaying an at-least-once feed.
 
         ``until`` pins the upper bound to a specific committed version
         (default: the newest).  A consumer that records the version it
@@ -2001,44 +2023,120 @@ class TxTable:
         restore caveat above.  ``delete_dv``/``update_dv`` are
         non-append ops, so matview's incremental fast path already
         falls back to a full recompute when one intervenes."""
-        old = self.snapshot(version)
-        head = self.snapshot(until)
-        if old is None or head is None:
-            raise FileNotFoundError(f"no committed version under {self.root}")
-        return self._scan(
-            head, [f for f in head.files if f not in set(old.files)]
+        return self._scan(*self._added_since(version, until))
+
+    def _since_base(
+        self, since: int, from_v1: bool = False
+    ) -> "TxSnapshot | None":
+        """The snapshot a feed of the versions after ``since`` diffs
+        against; None for 0, the empty table before the first commit.
+        Raises the one retention error of both feeds when the log no
+        longer holds ``since`` — or, for a change history from 0
+        (``from_v1``), v1: the state before a vacuumed version cannot
+        be reconstructed, and guessing it would be silently wrong."""
+        vs = self._versions()
+        if since in vs:
+            return self.snapshot(since)
+        if since == 0 and not (from_v1 and vs and vs[0] > 1):
+            return None
+        span = f"{vs[0]}..{vs[-1]}" if vs else "none"
+        raise FileNotFoundError(
+            f"version {since or 1} of {self.root} is not in the log "
+            f"(retained: {span}) — vacuum retention passed the "
+            "requested window; start from a retained version and keep "
+            "`retain` above the longest consumer outage (the "
+            "Delta-source contract)"
         )
 
-    def _dv_new_rows(
-        self,
-        cur: TxSnapshot,
-        prev: TxSnapshot,
-    ) -> "DataFrame | None":
-        """Rows newly deletion-vectored between two adjacent
-        snapshots: per carried file, the sidecars ``cur`` added over
-        ``prev`` name exact (file, pos) identities — a SEMI join
-        recovers the deleted rows' full images."""
-        new_paths: list[str] = []
-        files: list[str] = []
-        prev_dvs = prev.dvs or {}
-        for f, paths in (cur.dvs or {}).items():
-            fresh = [p for p in paths if p not in set(prev_dvs.get(f, []))]
-            if fresh and f in set(prev.files):
-                new_paths.extend(fresh)
-                files.append(f)
-        if not new_paths:
-            return None
-        # scan WITHOUT cur's vectors: the rows they name are the point
-        scanned = self._scan(
-            dataclasses.replace(cur, dvs=None), files, meta=("fp", "pos")
-        )
-        return self._dv_join(scanned, new_paths, "left_semi").drop(
-            "_fp", "_pos"
-        )
+    def _added_since(
+        self, version: int, until: int | None = None
+    ) -> "tuple[TxSnapshot, list[str]]":
+        """The add-only feed's plan, of ``read_since`` and the source's
+        stream: the snapshot at ``until`` (default: the head) and its
+        files added after ``version``, read under that snapshot's
+        vectors.  Manifest-only, no Spark."""
+        old = self._since_base(version)
+        head = self.snapshot(until)
+        if head is None:
+            raise FileNotFoundError(f"no committed version under {self.root}")
+        seen = set(old.files) if old else set()
+        return head, [f for f in head.files if f not in seen]
 
     # ops that re-arrange bytes without changing table content: their
     # file diffs are pure noise to a change consumer
     _CONTENT_NEUTRAL_OPS = frozenset({"compact", "purge"})
+    # labels="simple": a CDF sidecar's update images read as the
+    # delete/insert pair
+    _SIMPLE_LABELS = {"update_preimage": "delete", "update_postimage": "insert"}
+
+    def _change_steps(
+        self,
+        since: int,
+        until: int | None = None,
+        labels: str = "simple",
+        skip_neutral: bool = True,
+    ) -> list[_Step]:
+        """THE plan of a change feed over the versions after ``since``
+        up to ``until`` (default: the head), in commit order —
+        ``read_changes`` runs it through Spark, the source's
+        ``readChangeFeed`` through pyarrow.  Manifest-only, no Spark.
+        Per version:
+
+        - a content-neutral op (compact/purge) yields nothing when
+          ``skip_neutral``: its diff is byte movement, not change;
+        - a commit with a CDF sidecar yields the sidecar (``"cdf"``)
+          instead of its over-approximate file diff;
+        - otherwise added files read as inserts under the commit's
+          vectors (a restore to a DV'd version must not resurrect
+          rows), removed files as deletes under the PREVIOUS
+          version's (rows dead there were deleted earlier), and the
+          sidecars the commit added to carried files name exact row
+          deletes (``"semi"``; the step's snapshot carries only those
+          fresh sidecars).
+
+        ``labels="delta"`` tags an update_dv commit's fresh deletes
+        ``update_preimage`` and its added rows ``update_postimage``;
+        every other file diff keeps delete/insert under both
+        labelings (merge_dv, pre-r10 CoW and restore cannot pair)."""
+        if labels not in ("simple", "delta"):
+            raise ValueError(
+                f"labels must be 'simple' or 'delta', got {labels!r}"
+            )
+        prev = self._since_base(since, from_v1=True)
+        steps: list[_Step] = []
+        for v in self._versions():
+            if v <= since or (until is not None and v > until):
+                continue
+            base, cur = prev, self.snapshot(v)
+            prev = cur
+            if skip_neutral and cur.op in self._CONTENT_NEUTRAL_OPS:
+                continue
+            if cur.cdf:
+                steps.append(_Step(v, cur, list(cur.cdf), None, "cdf"))
+                continue
+            paired = labels == "delta" and cur.op == "update_dv"
+            old = set(base.files) if base else set()
+            added = [f for f in cur.files if f not in old]
+            if added:
+                tag = "update_postimage" if paired else "insert"
+                steps.append(_Step(v, cur, added, tag, "anti"))
+            if base is None:
+                continue
+            now = set(cur.files)
+            removed = [f for f in base.files if f not in now]
+            if removed:
+                steps.append(_Step(v, base, removed, "delete", "anti"))
+            seen = base.dvs or {}
+            fresh = {}
+            for f, paths in (cur.dvs or {}).items():
+                new = [p for p in paths if p not in seen.get(f, ())]
+                if new and f in old:
+                    fresh[f] = new
+            if fresh:
+                tag = "update_preimage" if paired else "delete"
+                snap = dataclasses.replace(cur, dvs=fresh)
+                steps.append(_Step(v, snap, list(fresh), tag, "semi"))
+        return steps
 
     def read_changes(
         self,
@@ -2074,119 +2172,51 @@ class TxTable:
 
         ``labels`` (r10): "simple" (default) emits the two-tag form
         ('insert' | 'delete'; updates appear as a pair) — the form the
-        oracles and the streaming feed use; "delta" passes through the
-        sidecars' four-tag Delta CDF labels ('update_preimage' /
-        'update_postimage' pair updates to their row) and tags
-        update_dv steps the same way from the op.  merge(mode='dv'),
-        pre-r10 CoW commits and restore cannot pair (their artifacts
-        don't distinguish update-fired from delete-fired rows) and
-        keep delete/insert under either labeling.
+        oracles key on; "delta" passes through the sidecars' four-tag
+        Delta CDF labels ('update_preimage' / 'update_postimage' pair
+        updates to their row) and tags update_dv steps the same way
+        from the op.  The steps are ``_change_steps``'.
 
         Cost ∝ the changed files and sidecars in the window, never
         the table; every version step reads under ITS schema and the
         union NULL-fills across schema evolution."""
         from pyspark.sql.types import StructType
 
-        all_versions = self._versions()
-        versions = [
-            v
-            for v in all_versions
-            if v > since and (until is None or v <= until)
-        ]
-        if since not in all_versions and since != 0:
-            raise FileNotFoundError(
-                f"version {since} of {self.root} is not in the log"
-            )
-        if labels not in ("simple", "delta"):
-            raise ValueError(
-                f"labels must be 'simple' or 'delta', got {labels!r}"
-            )
-        if since == 0 and all_versions and all_versions[0] > 1:
-            # the change feed's first step needs snapshot(since) as the
-            # base; a vacuum-truncated log cannot reconstruct changes
-            # from the beginning (ADVICE r9 — mirror the streaming
-            # source's retention error, not a bare version-missing one)
-            raise FileNotFoundError(
-                f"read_changes(since=0) on {self.root}: versions "
-                f"1..{all_versions[0] - 1} are no longer in the log — "
-                "vacuum retention passed the requested window (start "
-                f"from a retained version, earliest {all_versions[0]})"
-            )
+        relabel = F.col("_change_type")
+        if labels == "simple":
+            cases = F
+            for old, new in self._SIMPLE_LABELS.items():
+                cases = cases.when(relabel == old, F.lit(new))
+            relabel = cases.otherwise(relabel)
         parts: list[DataFrame] = []
-
-        def tag(df: DataFrame, kind: str, v: int) -> DataFrame:
-            return df.select(
-                F.lit(kind).alias("_change_type"),
-                F.lit(v).cast("long").alias("_commit_version"),
-                "*",
-            )
-
-        for v in versions:
-            cur = self.snapshot(v)
-            prev = self.snapshot(v - 1) if v - 1 >= 1 else None
-            if (
-                skip_content_neutral
-                and cur.op in self._CONTENT_NEUTRAL_OPS
-            ):
-                continue
-            if cur.cdf:
-                # the commit recorded its exact changeset — emit it and
-                # skip the (over-approximate) file diff entirely
-                ch = self.spark.read.parquet(*cur.cdf)
+        for st in self._change_steps(
+            since, until, labels, skip_content_neutral
+        ):
+            version = F.lit(st.version).cast("long").alias("_commit_version")
+            if st.dv == "cdf":
+                ch = self.spark.read.parquet(*st.files)
                 data_cols = [c for c in ch.columns if c != "_change_type"]
-                tag_col = F.col("_change_type")
-                if labels == "simple":
-                    tag_col = (
-                        F.when(
-                            tag_col == "update_preimage", F.lit("delete")
-                        )
-                        .when(
-                            tag_col == "update_postimage",
-                            F.lit("insert"),
-                        )
-                        .otherwise(tag_col)
-                    )
                 parts.append(
-                    ch.select(
-                        tag_col.alias("_change_type"),
-                        F.lit(v).cast("long").alias("_commit_version"),
-                        *data_cols,
-                    )
+                    ch.select(relabel.alias("_change_type"), version, *data_cols)
                 )
                 continue
-            prev_files = set(prev.files) if prev else set()
-            added = [f for f in cur.files if f not in prev_files]
-            removed = (
-                [f for f in prev.files if f not in set(cur.files)]
-                if prev
-                else []
+            if st.dv == "semi":
+                # scan WITHOUT the vectors: the rows they name are the
+                # point
+                df = self._dv_join(
+                    self._scan(
+                        dataclasses.replace(st.snap, dvs=None),
+                        st.files,
+                        meta=("fp", "pos"),
+                    ),
+                    [p for ps in st.snap.dvs.values() for p in ps],
+                    "left_semi",
+                ).drop("_fp", "_pos")
+            else:
+                df = self._scan(st.snap, st.files)
+            parts.append(
+                df.select(F.lit(st.tag).alias("_change_type"), version, "*")
             )
-            if added:
-                # read added files under CUR's deletion vectors: a
-                # commit that (re-)adds DV-carrying files — restore()
-                # to a DV'd version — must not emit DV-dead rows as
-                # 'insert' (ADVICE r9: the feed would resurrect rows
-                # absent from read()).  _scan keeps every DV-less
-                # step on the bare-scan fast path.
-                ins_tag = (
-                    "update_postimage"
-                    if labels == "delta" and cur.op == "update_dv"
-                    else "insert"
-                )
-                parts.append(tag(self._scan(cur, added), ins_tag, v))
-            if removed:
-                # rows already dead under PREV's vectors were deleted
-                # in an earlier version — do not re-emit them
-                parts.append(tag(self._scan(prev, removed), "delete", v))
-            if prev is not None:
-                dv_rows = self._dv_new_rows(cur, prev)
-                if dv_rows is not None:
-                    pre_tag = (
-                        "update_preimage"
-                        if labels == "delta" and cur.op == "update_dv"
-                        else "delete"
-                    )
-                    parts.append(tag(dv_rows, pre_tag, v))
         if not parts:
             head = self.snapshot(until)
             schema = StructType.fromJson(
@@ -2337,14 +2367,7 @@ class TxTable:
         snapshot scan) — the affected-file search of every mutation, and
         its match count.  No candidates: no scan, no job.  DV-deleted
         rows never make a file affected.  The result is metadata-sized
-        (a few paths), safe to collect on the driver.  file_path comes
-        back as a URI (``file:/x`` or ``file:///x``, %-encoded);
-        normalize to the plain paths the manifests store — without the
-        unquote, a partition dir with an escapable char (a space) would
-        yield paths matching NO manifest file and the rewrite would
-        silently skip its rows."""
-        from urllib.parse import unquote, urlparse
-
+        (a few paths), safe to collect on the driver."""
         if not files:
             return {}
         rows = (
@@ -2353,7 +2376,7 @@ class TxTable:
             .count()
             .collect()
         )
-        return {unquote(urlparse(r._fp).path): r["count"] for r in rows}
+        return {txlog.manifest_path(r._fp): r["count"] for r in rows}
 
     @staticmethod
     def _rebaseable_between(
@@ -2507,10 +2530,10 @@ class TxTable:
         expression; kept rows passed at their own commit — are gated
         by both before anything is written.  Data files take the
         snapshot's colmap; the CDF sidecar is sized to the affected
-        file count; DV sidecar keys are the URI-decoded file paths the
-        manifest stores (sidecar ``file`` values stay encoded — every
-        read-side join compares them against ``_norm_fp``); the commit
-        retries per ``_commit_vs_appends``.
+        file count; DV sidecar keys are manifest paths
+        (``txlog.manifest_path``; sidecar ``file`` values stay encoded,
+        the form ``_dv_join`` compares against ``_norm_fp``); the
+        commit retries per ``_commit_vs_appends``.
 
         The hit is NOT cached: under AQE a cached frame's first use is
         its own materialization job, and on update/delete/replace/DV
@@ -2518,8 +2541,6 @@ class TxTable:
         with it (tests/test_job_counts.py), and update_dv ran slower
         caching whole affected files.  An effect that reuses a frame
         many times (merge's clause join) persists that frame itself."""
-        from urllib.parse import unquote
-
         search = list(base.files) if files is None else files
         found = (
             dict.fromkeys(search, 0)
@@ -2561,7 +2582,9 @@ class TxTable:
             )
             # a DELTA, not the composed dict: the commit re-applies it
             # over each retry base's vectors
-            dv_delta = {unquote(f): list(paths) for f in seen.get["files"]}
+            dv_delta = {
+                txlog.manifest_path(f): list(paths) for f in seen.get["files"]
+            }
         version = self._commit_vs_appends(
             base,
             fx.op or op,
@@ -3885,14 +3908,9 @@ class TxTable:
         dvs = self._dvs_of(base)
         if not dvs:
             return base.version
-        from urllib.parse import unquote
-
         paths = sorted({p for v in dvs.values() for p in v})
-        # sidecar 'file' values are URI-encoded; the dvs dict keys are
-        # raw manifest paths — decode at the boundary or escaped-path
-        # files never cross the purge threshold
         dead = {
-            unquote(r.file): r.dead
+            txlog.manifest_path(r.file): r.dead
             for r in self.spark.read.schema(_DV_SCHEMA)
             .parquet(*paths)
             .groupBy("file")

@@ -29,9 +29,14 @@ under the same machinery.
 Every decision about the log itself is TxTable's, called on a
 session-less handle (``TxTable(None, root)`` — manifest-level methods
 never touch Spark, so they run in the plan worker and in the writer's
-commit callback): the sink commits through ``TxTable._commit_new``,
-pushdown prunes through ``TxTable._files_within``, time travel
-resolves through ``snapshot``/``version_at``, and per-file stats take
+commit callback).  The read plan is the engine's: an add-only batch
+is ``_added_since`` (``read_since``'s), a change-feed batch is
+``_change_steps`` (``read_changes``'), each file's physical names and
+live sidecars are ``TxSnapshot.phys_names``/``dvs_for`` (``_scan``'s),
+and sidecar ``file`` values decode through ``txlog.manifest_path``.
+The sink commits through ``TxTable._commit_new``, pushdown prunes
+through ``TxTable._files_within``, time travel resolves through
+``snapshot``/``version_at``, and per-file stats take
 ``txlog.stat_value``'s form.  This module keeps only what runs where
 no session exists: the pyarrow partition reader, the Arrow write
 tasks and the version-offset bookkeeping of the stream reader.
@@ -60,128 +65,113 @@ from .. import txlog  # pure Python (no Spark session): safe to ship
 from ..sources.txtable import _LOG_DIR, TxSnapshot, TxTable
 
 _versions = txlog.versions
-# materialized view: delta-form manifests (r11 log checkpointing)
-# reconstruct transparently
-_manifest = txlog.load_manifest
 
 
 @dataclass
 class _FilePartition(InputPartition):
+    """One file of a read plan: a data file of a snapshot scan or a
+    change step, or a CDF sidecar (``TxTable._change_steps``)."""
+
     file: str
-    phys_names: list[str]  # physical column name per logical field
+    phys: dict  # {logical field: physical column} of the read's
+    # schema; a column the file lacks reads NULL
     dv_paths: list[str]  # deletion-vector sidecars naming this file
-    keep_dv_rows: bool = False  # CDF delete partitions: the DV rows
-    # ARE the payload (semi mask) instead of being subtracted (anti)
+    dv: str = "anti"  # the step's DV mode: "anti" subtracts the rows
+    # the sidecars name, "semi" keeps only them, "cdf" reads ``file``
+    # as a CDF sidecar verbatim
     change: "tuple | None" = None  # (_change_type, _commit_version)
-    # when reading as a change feed; None = plain snapshot read
-    cdf_version: "int | None" = None  # when set, ``file`` is an exact
-    # per-commit CDF sidecar (r10): logical columns + its own
-    # _change_type column; read verbatim, NULL-filling columns the
-    # commit's schema predates, tagging this _commit_version
-    cdf_labels: str = "simple"  # r11, mirrors read_changes(labels=):
-    # "simple" collapses the sidecars' Delta tags to delete/insert
-    # (the oracle-gated default); "delta" passes the four-label form
-    # through (update_preimage/update_postimage pair updates), so a
-    # streaming CDC consumer can tell an update from delete+insert —
-    # Delta's readChangeFeed emits these natively
+    # when reading as a change feed (a "cdf" sidecar's type is per
+    # row: None); None = plain snapshot read
+    cdf_labels: str = "simple"  # read_changes(labels=) of a "cdf"
+    # sidecar: "simple" maps update images by TxTable._SIMPLE_LABELS,
+    # "delta" passes the four-label form through
+
+
+_EMPTY = _FilePartition("", {}, [])  # a trigger with nothing to read
 
 
 def _read_file_partition(part: _FilePartition, logical: StructType):
     """Executor-side: one parquet file -> arrow batches under LOGICAL
-    names with DV positions masked out (or, for CDF delete
-    partitions, kept — the sidecar names the payload).  Runs in the
-    Python worker; pyarrow only, no Spark."""
+    names with DV positions masked out (or, for "semi" partitions,
+    kept — the sidecar names the payload).  Runs in the Python worker;
+    pyarrow only, no Spark."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    want = to_arrow_schema(logical)
-    if part.cdf_version is not None:
-        # exact CDF sidecar: logical names at commit time + a per-row
-        # _change_type column.  NULL-fill columns added after the
-        # commit, cast narrower types up to the stream's schema.
+    data = to_arrow_schema(logical)
+    want = data
+    if part.change is not None:
+        want = pa.schema(
+            list(data)
+            + [
+                pa.field("_change_type", pa.string()),
+                pa.field("_commit_version", pa.int64()),
+            ]
+        )
+    if part.dv == "cdf":
+        # logical names at commit time + a per-row _change_type;
+        # NULL-fill columns added after the commit
         raw = pq.read_table(part.file)
         n = raw.num_rows
         avail = set(raw.schema.names)
+        ct = raw.column("_change_type").cast(pa.string())
+        if part.cdf_labels == "simple":
+            for old, new in TxTable._SIMPLE_LABELS.items():
+                ct = pc.if_else(
+                    pc.equal(ct, old), pa.scalar(new, pa.string()), ct
+                )
         arrays = [
             raw.column(f.name) if f.name in avail else pa.nulls(n, f.type)
-            for f in want
+            for f in data
         ]
-        out_schema = pa.schema(
-            list(want)
-            + [
-                pa.field("_change_type", pa.string()),
-                pa.field("_commit_version", pa.int64()),
-            ]
-        )
-        # default ("simple"): collapse the sidecars' Delta labels
-        # (update_preimage/postimage, r10) so the feed stays in parity
-        # with read_changes' default labeling; labels="delta" (r11)
-        # passes the four-label form through, = read_changes(labels=
-        # "delta")
-        ct = raw.column("_change_type").cast(pa.string())
-        if part.cdf_labels != "delta":
-            ct = pc.if_else(
-                pc.equal(ct, "update_preimage"),
-                pa.scalar("delete", pa.string()),
-                pc.if_else(
-                    pc.equal(ct, "update_postimage"),
-                    pa.scalar("insert", pa.string()),
-                    ct,
-                ),
-            )
         tbl = pa.Table.from_arrays(
-            arrays
-            + [
-                ct,
-                pa.array([part.cdf_version] * n, pa.int64()),
-            ],
-            names=out_schema.names,
+            arrays + [ct, pa.array([part.change[1]] * n, pa.int64())],
+            names=want.names,
         )
-        if tbl.schema != out_schema:
-            tbl = tbl.cast(out_schema)
-        yield from tbl.to_batches(max_chunksize=1 << 16)
-        return
-    pf = pq.ParquetFile(part.file)
-    avail = set(pf.schema_arrow.names)
-    present = [c for c in part.phys_names if c in avail]
-    raw = pq.read_table(part.file, columns=present)
-    n_rows = pf.metadata.num_rows
-    # logical order, NULL-filling columns the file predates (the same
-    # schema-evolution semantics Spark's parquet reader gives TxTable)
-    arrays = []
-    for field, phys in zip(want, part.phys_names):
-        if phys in avail:
-            arrays.append(raw.column(phys))
-        else:
-            arrays.append(pa.nulls(n_rows, type=field.type))
-    tbl = pa.Table.from_arrays(arrays, schema=None, names=want.names)
-    if part.dv_paths:
-        dv = pa.concat_tables(pq.read_table(p) for p in part.dv_paths)
-        dv = dv.filter(pc.equal(dv["file"], part.file))
-        dead = dv["pos"].to_pylist()
-        pos = pa.array(range(tbl.num_rows), type=pa.int64())
-        mask = pc.is_in(pos, value_set=pa.array(dead, type=pa.int64()))
-        tbl = tbl.filter(mask if part.keep_dv_rows else pc.invert(mask))
-    elif part.keep_dv_rows:
-        tbl = tbl.slice(0, 0)  # defensive: no sidecar, no payload
-    if part.change is not None:
-        kind, version = part.change
-        n = tbl.num_rows
-        tbl = tbl.append_column(
-            "_change_type", pa.array([kind] * n, pa.string())
-        ).append_column(
-            "_commit_version", pa.array([version] * n, pa.int64())
-        )
-        want = pa.schema(
-            list(want)
-            + [
-                pa.field("_change_type", pa.string()),
-                pa.field("_commit_version", pa.int64()),
+    else:
+        pf = pq.ParquetFile(part.file)
+        avail = set(pf.schema_arrow.names)
+        present = [c for c in part.phys.values() if c in avail]
+        raw = pq.read_table(part.file, columns=present)
+        n_rows = pf.metadata.num_rows
+        # logical order, NULL-filling columns the file or the read's
+        # snapshot predates (the same schema-evolution semantics
+        # Spark's parquet reader gives TxTable)
+        arrays = [
+            raw.column(part.phys[f.name])
+            if part.phys.get(f.name) in avail
+            else pa.nulls(n_rows, f.type)
+            for f in data
+        ]
+        tbl = pa.Table.from_arrays(arrays, names=data.names)
+        if part.dv_paths:
+            dv = pa.concat_tables(pq.read_table(p) for p in part.dv_paths)
+            # sidecar 'file' values are %-encoded URI paths: match
+            # them to this manifest path the way the engine does
+            mine = [
+                u
+                for u in pc.unique(dv["file"]).to_pylist()
+                if txlog.manifest_path(u) == part.file
             ]
-        )
+            dead = dv.filter(
+                pc.is_in(dv["file"], value_set=pa.array(mine, pa.string()))
+            )["pos"]
+            pos = pa.array(range(tbl.num_rows), type=pa.int64())
+            mask = pc.is_in(pos, value_set=dead.combine_chunks())
+            tbl = tbl.filter(mask if part.dv == "semi" else pc.invert(mask))
+        elif part.dv == "semi":
+            tbl = tbl.slice(0, 0)  # defensive: no sidecar, no payload
+        if part.change is not None:
+            kind, version = part.change
+            n = tbl.num_rows
+            tbl = tbl.append_column(
+                "_change_type", pa.array([kind] * n, pa.string())
+            ).append_column(
+                "_commit_version", pa.array([version] * n, pa.int64())
+            )
     # conform arrow types to the logical schema (a file written before
     # an ANSI-widening may carry narrower physical types)
     if tbl.schema != want:
@@ -189,85 +179,15 @@ def _read_file_partition(part: _FilePartition, logical: StructType):
     yield from tbl.to_batches(max_chunksize=1 << 16)
 
 
-def _phys_names(schema_json: str, colmap) -> list[str]:
-    """The physical column name of each logical field."""
-    phys = {c["name"]: c["phys"] for c in colmap or ()}
-    logical = StructType.fromJson(json.loads(schema_json))
-    return [phys.get(f.name, f.name) for f in logical.fields]
-
-
 def _partitions_for(
-    schema_json: str, colmap, dvs, files: list[str]
+    phys: dict, snap: TxSnapshot, files: list[str], **kw
 ) -> list[_FilePartition]:
-    phys_names = _phys_names(schema_json, colmap)
-    dvs = dvs or {}
+    """``files`` of ``snap`` as partitions read through ``phys`` (a
+    ``TxSnapshot.phys_names``) under ``snap``'s live sidecars."""
+    dvs = snap.dvs_for(files)
     return [
-        _FilePartition(f, phys_names, sorted(dvs.get(f, [])))
-        for f in files
+        _FilePartition(f, phys, sorted(dvs.get(f, ())), **kw) for f in files
     ]
-
-
-def _cdf_partitions_for_step(log_dir: str, v: int, labels: str = "simple"):
-    """Change partitions for ONE version step v-1 -> v, mirroring
-    TxTable.read_changes semantics: added files -> inserts (live rows
-    under the step's own vectors), removed files -> deletes under the
-    PREV version's vectors, fresh DV sidecar entries on carried files
-    -> exact row deletes; content-neutral compact/purge emit
-    nothing.  ``labels="delta"`` (r11) passes the CDF sidecars'
-    four-label tags through and tags update_dv steps as
-    update_preimage/update_postimage — the same rule as
-    read_changes(labels="delta"); merge_dv/pre-r10/restore steps
-    can't pair and keep delete/insert under either labeling."""
-    cur = _manifest(log_dir, v)
-    if cur.get("op") in ("compact", "purge"):
-        return []
-    if cur.get("cdf"):
-        # the commit recorded its exact changeset (r10) — read the
-        # sidecar instead of diffing files, exactly like read_changes
-        return [
-            _FilePartition(p, [], [], cdf_version=v, cdf_labels=labels)
-            for p in cur["cdf"]
-        ]
-    delta_update = labels == "delta" and cur.get("op") == "update_dv"
-    prev = _manifest(log_dir, v - 1) if v > 1 else None
-    prev_files = set(prev["files"]) if prev else set()
-    prev_dvs = (prev.get("dvs") or {}) if prev else {}
-    out: list[_FilePartition] = []
-    added = [f for f in cur["files"] if f not in prev_files]
-    for p in _partitions_for(
-        cur["schema"], cur.get("colmap"), cur.get("dvs"), added
-    ):
-        p.change = ("update_postimage" if delta_update else "insert", v)
-        out.append(p)
-    if prev:
-        removed = [f for f in prev["files"] if f not in set(cur["files"])]
-        for p in _partitions_for(
-            prev["schema"], prev.get("colmap"), prev.get("dvs"), removed
-        ):
-            p.change = ("delete", v)
-            out.append(p)
-        # fresh sidecar entries on carried files: exact row deletes
-        # (update_dv: the pre-images of the rewritten rows)
-        phys = None
-        for f, paths in (cur.get("dvs") or {}).items():
-            fresh = sorted(set(paths) - set(prev_dvs.get(f, [])))
-            if not fresh or f not in prev_files:
-                continue
-            if phys is None:
-                phys = _phys_names(cur["schema"], cur.get("colmap"))
-            out.append(
-                _FilePartition(
-                    f,
-                    phys,
-                    fresh,
-                    keep_dv_rows=True,
-                    change=(
-                        "update_preimage" if delta_update else "delete",
-                        v,
-                    ),
-                )
-            )
-    return out
 
 
 class _TxStreamReader(DataSourceStreamReader):
@@ -290,6 +210,11 @@ class _TxStreamReader(DataSourceStreamReader):
         self.max_versions = max_versions_per_trigger
         self.change_feed = change_feed
         self._seen: int | None = None  # newest end handed to partitions()
+        # the stream's schema is the head's at start, so are the
+        # physical columns every file of every step is read through:
+        # a later rename keeps a column's physical name, and files
+        # older than an added column lack it (NULL)
+        self.phys = TxTable(None, root).snapshot().phys_names()
 
     def initialOffset(self) -> dict:
         # default: start BEFORE the first commit — the initial
@@ -342,35 +267,23 @@ class _TxStreamReader(DataSourceStreamReader):
     def _partitions(self, start: dict, end: dict):
         sv, ev = start["version"], end["version"]
         if ev <= sv:
-            return [_FilePartition("", [], [])]  # empty trigger
-        try:
-            if self.change_feed:
-                first = 1 if sv == 0 else sv + 1
-                out = [
-                    p
-                    for v in range(first, ev + 1)
-                    for p in _cdf_partitions_for_step(
-                        self.log_dir, v, self.cdf_labels
-                    )
-                ]
-                return out or [_FilePartition("", [], [])]
-            old_files: set[str] = set()
-            if sv > 0:
-                old_files = set(_manifest(self.log_dir, sv)["files"])
-            head = _manifest(self.log_dir, ev)
-        except FileNotFoundError as e:
-            raise FileNotFoundError(
-                f"txtable source at {self.root}: version {sv}..{ev} "
-                "is no longer in the log — vacuum retention passed "
-                "the stream's checkpoint (keep `retain` above the "
-                "longest consumer outage, the Delta-source contract)"
-            ) from e
-        new_files = [f for f in head["files"] if f not in old_files]
-        if not new_files:
-            return [_FilePartition("", [], [])]
-        return _partitions_for(
-            head["schema"], head.get("colmap"), head.get("dvs"), new_files
-        )
+            return [_EMPTY]
+        t = TxTable(None, self.root)
+        if not self.change_feed:
+            head, files = t._added_since(sv, ev)
+            return _partitions_for(self.phys, head, files) or [_EMPTY]
+        return [
+            p
+            for st in t._change_steps(sv, ev, self.cdf_labels)
+            for p in _partitions_for(
+                self.phys,
+                st.snap,
+                st.files,
+                dv=st.dv,
+                change=(st.tag, st.version),
+                cdf_labels=self.cdf_labels,
+            )
+        ] or [_EMPTY]
 
     def read(self, partition: _FilePartition):
         if not partition.file:
@@ -440,15 +353,13 @@ class _TxBatchReader(DataSourceReader):
         t = TxTable(None, self.root)
         snap = t.snapshot(self.version)
         if snap is None:
-            return [_FilePartition("", [], [])]
+            return [_EMPTY]
         # the engine's stats pruning (files_in_range semantics): a
         # file is skipped only when its [min, max] provably misses a
         # bound; stat-less files and unorderable bounds are admitted
         keep = t._files_within(snap, self.bounds)
         files = [f for f in snap.files if keep is None or f in keep]
-        if not files:
-            return [_FilePartition("", [], [])]
-        return _partitions_for(snap.schema_json, snap.colmap, snap.dvs, files)
+        return _partitions_for(snap.phys_names(), snap, files) or [_EMPTY]
 
     def read(self, partition: _FilePartition):
         if not partition.file:

@@ -86,6 +86,18 @@ def stat_value(v):
     return v
 
 
+def manifest_path(uri: str) -> str:
+    """The manifest's plain OS path of a Spark-derived file name
+    (``_metadata.file_path``, ``inputFiles()``, a DV sidecar's
+    ``file`` value): drop the ``file:`` scheme, undo the %-encoding.
+    Without the decode a partition dir such as ``__txp_p=north
+    region`` (``north%20region`` in the URI) matches no manifest
+    path.  ``urlsplit``, not ``urlparse``: a ``;`` stays in the path."""
+    from urllib.parse import unquote, urlsplit
+
+    return unquote(urlsplit(uri).path)
+
+
 def versions(log_dir: str) -> list[int]:
     if not os.path.isdir(log_dir):
         return []

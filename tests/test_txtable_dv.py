@@ -9,6 +9,7 @@ GCs superseded sidecars but never live ones.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -575,6 +576,20 @@ def test_read_changes_since_zero_vacuumed_log(spark, tmp_path):
     t.vacuum(retain=1, min_age_seconds=0.0)
     with pytest.raises(FileNotFoundError, match="retention"):
         t.read_changes(0)
+    # the source plans through the same checks: no streaming query,
+    # just the partition planning of a window the log no longer holds
+    from pyspark.sql.types import StructType
+
+    from etl_pipeline_fresh_picked_leads_spark.streaming.txtable_source import (
+        _TxStreamReader,
+    )
+
+    schema = StructType.fromJson(json.loads(t.snapshot().schema_json))
+    head = {"version": t.snapshot().version}
+    for feed, start in ((True, 0), (False, 1)):
+        reader = _TxStreamReader(root, schema, change_feed=feed)
+        with pytest.raises(FileNotFoundError, match="retention"):
+            reader._partitions({"version": start}, head)
     # a retained-window read still works
     assert t.read_changes(t.snapshot().version).count() == 0
 

@@ -796,3 +796,200 @@ def test_sink_and_engine_append_record_equal_stats(reg, tmp_path):
         1, 2, 3,
     ]
     assert sink.update(F.col("t") == F.lit(x), {"s": F.lit("hit")}) == 1
+
+
+# ---- escaped partition paths: one read plan, one key form ------------
+
+
+@pytest.fixture(scope="module")
+def escaped(spark, tmp_path_factory):
+    """A table partitioned on ``p = "north region"`` (its data dir is
+    %-encoded in Spark's file URIs), 20 rows: v2 deletion-vectors
+    k < 5, v3 updates k == 7 through a vector."""
+    register(spark)
+    root = str(tmp_path_factory.mktemp("escaped") / "t")
+    t = TxTable.create(
+        spark,
+        root,
+        spark.createDataFrame(
+            [(i, "north region", float(i)) for i in range(20)],
+            "k bigint, p string, price double",
+        ).coalesce(1),
+        partition_by=["p"],
+    )
+    assert t.delete_dv(F.col("k") < 5) == 5
+    assert t.update_dv(F.col("k") == 7, {"price": F.lit(99.0)}) == 1
+    assert any("north region" in f for f in t.snapshot().files)
+    return t
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("k", "p", "price").collect())
+
+
+def test_batch_reader_masks_dvs_on_escaped_partition_path(escaped):
+    """The batch format("txtable") reader matches DV sidecar rows (URI
+    form) to manifest paths (raw form) the way the engine does."""
+    spark = escaped.spark
+    want = _rows(escaped.read())
+    assert len(want) == 15
+    got = spark.read.format("txtable").option("path", escaped.root).load()
+    assert _rows(got) == want
+
+
+def test_stream_masks_dvs_on_escaped_partition_path(escaped, tmp_path):
+    """The add-only stream delivers the head's live rows: no DV-dead
+    row, no pre-update image."""
+    spark = escaped.spark
+    out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
+    _drain(spark, escaped.root, out, chk)
+    assert _rows(spark.read.parquet(out)) == _rows(escaped.read())
+
+
+def test_stream_change_feed_on_escaped_partition_path(escaped, tmp_path):
+    """readChangeFeed with labels="delta" equals
+    read_changes(1, labels="delta"): the five DV deletes at v2 and the
+    update_dv pre/postimage pair at v3."""
+    spark = escaped.spark
+    out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
+    q = (
+        spark.readStream.format("txtable")
+        .option("path", escaped.root)
+        .option("readChangeFeed", "true")
+        .option("labels", "delta")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(240), "stream stalled"
+
+    def feed(df):
+        return sorted(
+            (r._commit_version, r._change_type, r.k, r.price)
+            for r in df.collect()
+            if r._commit_version > 1
+        )
+
+    batch = feed(escaped.read_changes(1, labels="delta"))
+    assert batch == [
+        *[(2, "delete", k, float(k)) for k in range(5)],
+        (3, "update_postimage", 7, 99.0),
+        (3, "update_preimage", 7, 7.0),
+    ], batch
+    assert feed(spark.read.parquet(out)) == batch
+
+
+def test_change_steps_plan_is_session_less(tmp_path):
+    """TxTable._change_steps plans from manifests alone (the handle has
+    no session, so a Spark job could not even start): content-neutral
+    steps yield nothing, a CDF-bearing commit reads its sidecar,
+    update_dv tags by labeling, removed files read under the previous
+    version's vectors."""
+    from etl_pipeline_fresh_picked_leads_spark import txlog
+
+    root = str(tmp_path / "t")
+    log_dir = os.path.join(root, "_txlog")
+    schema = (
+        '{"type": "struct", "fields": [{"name": "k", "type": "long",'
+        ' "nullable": true, "metadata": {}}]}'
+    )
+    for v, op, files, dvs, cdf in [
+        (1, "append", ["a", "b"], None, None),
+        (2, "delete_dv", ["a", "b"], {"a": ["dv1"]}, None),
+        (3, "update_dv", ["a", "b", "c"], {"a": ["dv1", "dv2"]}, None),
+        (4, "overwrite", ["d"], None, None),
+        (5, "compact", ["e"], None, None),
+        (6, "purge", ["f"], None, None),
+        (7, "update", ["g"], None, ["s7"]),
+    ]:
+        txlog.write_manifest(
+            log_dir,
+            {
+                "version": v,
+                "op": op,
+                "files": files,
+                "schema": schema,
+                "dvs": dvs,
+                "cdf": cdf,
+            },
+        )
+    t = TxTable(None, root)
+
+    def plan(labels="simple", **kw):
+        return [
+            (s.version, s.snap.version, s.files, s.tag, s.dv,
+             s.snap.dvs_for(s.files))
+            for s in t._change_steps(1, labels=labels, **kw)
+        ]
+
+    simple = plan()
+    assert simple == [
+        (2, 2, ["a"], "delete", "semi", {"a": ["dv1"]}),
+        (3, 3, ["c"], "insert", "anti", {}),
+        (3, 3, ["a"], "delete", "semi", {"a": ["dv2"]}),
+        # removed files under v3's vectors, not v4's (it has none)
+        (4, 4, ["d"], "insert", "anti", {}),
+        (4, 3, ["a", "b", "c"], "delete", "anti", {"a": ["dv1", "dv2"]}),
+        (7, 7, ["s7"], None, "cdf", {}),
+    ], simple
+    delta = plan("delta")
+    assert [s[3] for s in delta if s[0] == 3] == [
+        "update_postimage",
+        "update_preimage",
+    ]
+    assert [s for s in delta if s[0] != 3] == [
+        s for s in simple if s[0] != 3
+    ]
+    # with neutral steps kept, compact and purge read as file diffs
+    assert [s[:5] for s in plan(skip_neutral=False) if s[0] in (5, 6)] == [
+        (5, 5, ["e"], "insert", "anti"),
+        (5, 4, ["d"], "delete", "anti"),
+        (6, 6, ["f"], "insert", "anti"),
+        (6, 5, ["e"], "delete", "anti"),
+    ]
+
+
+def test_change_feed_partitions_across_add_and_rename_column(reg, tmp_path):
+    """readChangeFeed's partitions read every step's files through the
+    stream schema's physical columns: rows older than an added column
+    read NULL in it, as in read_changes, and a later rename keeps the
+    values (planned and read here without a streaming query)."""
+    from etl_pipeline_fresh_picked_leads_spark.streaming.txtable_source import (
+        _TxStreamReader,
+    )
+
+    spark = reg
+    root = str(tmp_path / "t")
+    t = TxTable.create(
+        spark,
+        root,
+        spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, name string")
+        .coalesce(1),
+    )
+    t.add_column("price", "double")
+    t.append(
+        spark.createDataFrame(
+            [(3, "c", 3.0)], "k bigint, name string, price double"
+        )
+    )
+    batch = sorted(
+        (r._commit_version, r._change_type, r.k, r.name, r.price)
+        for r in t.read_changes(0).collect()
+    )
+    t.rename_column("name", "label")
+    reader = _TxStreamReader(root, t.read().schema, change_feed=True)
+    got = sorted(
+        (r["_commit_version"], r["_change_type"], r["k"], r["label"],
+         r["price"])
+        for p in reader._partitions({"version": 0}, {"version": 4})
+        for b in reader.read(p)
+        for r in b.to_pylist()
+    )
+    assert got == batch == [
+        (1, "insert", 1, "a", None),
+        (1, "insert", 2, "b", None),
+        (3, "insert", 3, "c", 3.0),
+    ], got
