@@ -1,5 +1,6 @@
-"""Sources: readers, catalog helpers, reconciliation ingest, ledger,
-maintenance, sinks."""
+"""Sources: readers, the lead-table catalog (name -> TxTable root),
+reconciliation ingest, at-rest Annotate, the partitioned sink, and the
+TxTable format."""
 
 from .readers import (
     read_csv_inferred,
@@ -18,24 +19,19 @@ from .ingest import (
     spark_type_for,
     stamp_ingestion_date,
 )
-from .ledger import IngestLedger, file_checksum
 from .maintenance import (
     ensure_ingestion_date_column,
     set_ingestion_date_where_null,
 )
 from .sinks import (
     read_partition,
-    write_append,
-    write_overwrite,
     write_partitioned,
 )
 
 __all__ = [
     "CAST_TARGETS",
-    "IngestLedger",
     "IngestResult",
     "ensure_ingestion_date_column",
-    "file_checksum",
     "ingest_csv",
     "ingest_directory",
     "read_csv_inferred",
@@ -50,7 +46,5 @@ __all__ = [
     "table_exists",
     "table_path",
     "table_schema",
-    "write_append",
-    "write_overwrite",
     "write_partitioned",
 ]

@@ -26,10 +26,16 @@ section 4.2 — these are scale/correctness fixes, not semantic drift):
 - Files are moved to processed/ or failed/ instead of deleted even on
   failure (:84-89 deletes in ``finally`` — a data-loss bug we do not
   replicate).
+- Exactly-once per table and content: each lead table is a TxTable
+  (sources/catalog.py), and a file's load is ONE commit tagged with
+  the sha256 of its bytes, so the load and its "already loaded" record
+  are the same atomic manifest link.  Re-landed bytes are skipped; a
+  crash before the file is archived reloads nothing.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 from dataclasses import dataclass, field
@@ -50,8 +56,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .catalog import table_exists, table_schema
+from .catalog import lead_table, register_view, table_exists, table_schema
 from .readers import read_csv_inferred
+from .txtable import _DATA_DIR, _LOG_DIR
 
 INGESTION_DATE_COL = "Ingestion_date"
 
@@ -146,20 +153,27 @@ def stamp_ingestion_date(df: DataFrame, run_date: date | None = None) -> DataFra
 
 @dataclass
 class IngestResult:
-    """Per-run summary — the persistent cross-run record is the
-    IngestLedger (ledger.py), replacing the reference's
-    delete-file-as-ledger (big_uery_handler.py:84-89).  ``pending``
-    lists files whose checksum has a dangling 'loading' intent from a
-    crashed earlier run: they are left in place, NOT reloaded, until
-    an operator reconciles the ledger (see IngestLedger.pending)."""
+    """Per-run summary — the persistent cross-run record is each
+    table's transaction log (a file's content checksum is its commit's
+    txn tag), replacing the reference's delete-file-as-ledger
+    (big_uery_handler.py:84-89)."""
 
     loaded: list[str] = field(default_factory=list)
     failed: dict[str, str] = field(default_factory=dict)
     skipped: list[str] = field(default_factory=list)
-    pending: list[str] = field(default_factory=list)
     # populated by run_pipeline's post-load validator (pipeline.py):
     # {check_name: n_violations} for failed checks only
     dq_violations: dict[str, int] = field(default_factory=dict)
+
+
+def file_checksum(path: str) -> str:
+    """Content checksum (sha256) — identity of the *bytes*, so a
+    re-landed copy of the same file is recognized."""
+    h = hashlib.sha256()
+    with open(path, "rb") as f:
+        for chunk in iter(lambda: f.read(1 << 20), b""):
+            h.update(chunk)
+    return h.hexdigest()
 
 
 def table_name_for_file(file_name: str) -> str:
@@ -173,27 +187,47 @@ def ingest_csv(
     path: str,
     table: str | None = None,
     run_date: date | None = None,
-) -> str:
-    """Load one CSV into its table, reference-style
+) -> bool:
+    """Load one CSV into its lead table as ONE TxTable commit tagged
+    ``txn=<sha256 of the file>``, reference-style
     (big_uery_handler.py:93-106):
 
-    - table absent: autodetect-create with overwrite (:104,108-122)
-    - table present: reconcile to the target schema and append
+    - table absent: autodetect-create (:104,108-122) — ``overwrite``
+      of the uncreated root, the reference's WRITE_TRUNCATE create,
+      committing data and tag as one version;
+    - table present: reconcile to the head schema and ``append``
       (:97,124-165) — no staging table; the cast-select pipelines into
-      the write
+      the write;
     - either way, Ingestion_date ends up present and non-NULL
-      (:173-194), stamped at write time
-    """
+      (:173-194), stamped at write time.
+
+    Returns False, reading nothing, when these bytes are already
+    committed to the table.  Either way the by-name view is
+    (re)registered, so a rerun's fresh process can read the table.  A
+    root holding files but no transaction log (a table written some
+    other way) is refused, never overwritten."""
     table = table or table_name_for_file(path)
-    raw = read_csv_inferred(spark, path)
-    if table_exists(spark, table):
-        target = table_schema(spark, table)
-        df = stamp_ingestion_date(reconcile(raw, target), run_date)
-        df.write.mode("append").saveAsTable(table)
-    else:
-        df = stamp_ingestion_date(raw, run_date)
-        df.write.mode("overwrite").saveAsTable(table)
-    return table
+    txn = file_checksum(path)
+    t = lead_table(spark, table)
+    exists = table_exists(spark, table)
+    loaded = not (exists and t.has_txn(txn))
+    if not exists and os.path.isdir(t.root) and (
+        set(os.listdir(t.root)) - {_LOG_DIR, _DATA_DIR}
+    ):
+        raise FileExistsError(
+            f"{t.root} holds files but no transaction log; move them "
+            "out of the warehouse before loading this table"
+        )
+    if loaded:
+        raw = read_csv_inferred(spark, path)
+        if exists:
+            target = table_schema(spark, table)
+            df = stamp_ingestion_date(reconcile(raw, target), run_date)
+            t.append(df, txn=txn)
+        else:
+            t.overwrite(stamp_ingestion_date(raw, run_date), txn=txn)
+    register_view(spark, table)
+    return loaded
 
 
 def ingest_directory(
@@ -201,18 +235,15 @@ def ingest_directory(
     landing_dir: str,
     run_date: date | None = None,
     archive: bool = True,
-    ledger: "IngestLedger | None" = None,
     max_workers: int = 8,
 ) -> IngestResult:
     """Scan a landing directory and load every ``*.csv``
     (big_uery_handler.py:68-89), with per-file error isolation
-    (:78-83).  Successful files move to processed/, failed files to
-    failed/ (deviation from the reference's unconditional delete,
-    :84-89).  With a ledger, files whose content checksum was already
-    loaded are skipped — exactly-once across reruns/replays — and each
-    load writes a 'loading' intent first, so a crash between the Spark
-    append and the ledger record surfaces as ``result.pending`` on the
-    rerun instead of a silent double-load.
+    (:78-83).  Successful and skipped files move to processed/, failed
+    files to failed/ (deviation from the reference's unconditional
+    delete, :84-89).  A file whose bytes its table already committed
+    is reported ``skipped`` — re-landed files, and a rerun after a
+    crash between a load's commit and its archive, load nothing.
 
     Files are grouped by target table and tables load CONCURRENTLY
     (``max_workers`` driver threads, each submitting independent Spark
@@ -222,8 +253,6 @@ def ingest_directory(
     sequential in name order: appends to one table must not race."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
-
-    from .ledger import file_checksum
 
     result = IngestResult()
     lock = threading.Lock()
@@ -240,31 +269,14 @@ def ingest_directory(
 
     def _load_one(table: str, name: str) -> None:
         path = os.path.join(landing_dir, name)
-        checksum = file_checksum(path) if ledger else ""
-        if ledger and ledger.already_loaded(checksum):
-            with lock:
-                result.skipped.append(name)
-            if archive:
-                _archive(path, name, "processed")
-            return
-        if ledger and ledger.pending(checksum):
-            with lock:  # crashed mid-load earlier: needs reconciliation
-                result.pending.append(name)
-            return  # leave in place
-        if ledger:
-            ledger.record(checksum, name, table, "loading")
         try:
-            ingest_csv(spark, path, table=table, run_date=run_date)
+            loaded = ingest_csv(spark, path, table=table, run_date=run_date)
             with lock:
-                result.loaded.append(name)
-            if ledger:
-                ledger.record(checksum, name, table, "loaded")
+                (result.loaded if loaded else result.skipped).append(name)
             dest = "processed"
         except Exception as exc:  # noqa: BLE001 — per-file isolation (:78-83)
             with lock:
                 result.failed[name] = str(exc)
-            if ledger:
-                ledger.record(checksum, name, table, "failed")
             dest = "failed"
         if archive:
             _archive(path, name, dest)
@@ -287,5 +299,4 @@ def ingest_directory(
             list(pool.map(_load_table, by_table.keys(), by_table.values()))
     result.loaded.sort()
     result.skipped.sort()
-    result.pending.sort()
     return result

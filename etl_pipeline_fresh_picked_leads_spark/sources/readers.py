@@ -92,9 +92,13 @@ def read_csv_inferred(spark: SparkSession, path: str) -> DataFrame:
 
     Mirrors the reference's autodetect load
     (/root/reference/big_uery_handler.py:110-118: ``skip_leading_rows=1,
-    autodetect=True``).  Note inference requires an extra pass over the
-    file; the ingest engine (ingest.py) only infers on first load of a
-    table and reconciles to the stored target schema afterwards.
+    autodetect=True``).  Ingest (ingest.py) infers on EVERY load, then
+    reconciles an existing table's load to its stored schema: the
+    reference SAFE_CASTs from autodetected staging types
+    (:124-136), so ``"123.0"`` landing in a BIGINT column reads back
+    123 (inferred double -> bigint), where a header-plus-string read
+    would turn it into NULL.  Inference costs an extra pass over the
+    file.
 
     ``multiLine`` matches BigQuery's handling of quoted embedded
     newlines (allow_quoted_newlines).  Tradeoff: a multiLine CSV file

@@ -1,14 +1,10 @@
-"""Table sinks: overwrite / append / partitioned writes.
-
-Reference parity: WRITE_TRUNCATE and INSERT INTO ... SELECT
-(/root/reference/big_uery_handler.py:114,133,158-165).  The
-partitioned form is the SURVEY §7 stage-6 layout decision: tables
-partitioned by Ingestion_date so (a) each daily batch is one new
-partition directory (append = O(batch), no read-modify-write), and
-(b) date-ranged queries prune to the touched partitions at planning
-time (PartitionFilters in the scan — asserted in tests/test_plans.py).
-At 100 TB this is the difference between scanning a day and scanning
-a decade.
+"""Date-partitioned table sink — the SURVEY §7 stage-6 layout
+decision: tables partitioned by Ingestion_date so (a) each daily batch
+is one new partition directory (append = O(batch), no
+read-modify-write), and (b) date-ranged queries prune to the touched
+partitions at planning time (PartitionFilters in the scan — asserted
+in tests/test_plans.py).  At 100 TB this is the difference between
+scanning a day and scanning a decade.
 """
 
 from __future__ import annotations
@@ -16,16 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .ingest import INGESTION_DATE_COL
-
-
-def write_overwrite(df: DataFrame, table: str) -> None:
-    """WRITE_TRUNCATE equivalent (big_uery_handler.py:114,133)."""
-    df.write.mode("overwrite").saveAsTable(table)
-
-
-def write_append(df: DataFrame, table: str) -> None:
-    """INSERT INTO ... SELECT equivalent (big_uery_handler.py:158-165)."""
-    df.write.mode("append").saveAsTable(table)
 
 
 def write_partitioned(

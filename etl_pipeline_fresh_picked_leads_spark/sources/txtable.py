@@ -185,6 +185,14 @@ class TxSnapshot:
             for f in json.loads(self.schema_json)["fields"]
         }
 
+    def names_at(self, other: "TxSnapshot") -> dict:
+        """``{logical field: its logical name at ``other``}`` (None
+        where ``other`` lacks the field), matched by physical column,
+        which a rename keeps and the colmap never reassigns: how a
+        change feed reads an older step under this snapshot's names."""
+        at = {p: n for n, p in other.phys_names().items()}
+        return {n: at.get(p) for n, p in self.phys_names().items()}
+
     def dvs_for(self, files) -> dict:
         """``{file: [DV sidecar paths]}`` for the files among ``files``
         that carry live deletion vectors in this snapshot."""
@@ -2178,27 +2186,45 @@ class TxTable:
         from the op.  The steps are ``_change_steps``'.
 
         Cost ∝ the changed files and sidecars in the window, never
-        the table; every version step reads under ITS schema and the
-        union NULL-fills across schema evolution."""
+        the table.  Every step reads under the ``until`` snapshot's
+        logical names, matched by field (physical column, which a
+        rename keeps and the colmap never reassigns): a column renamed
+        inside the window stays one column, a column added later reads
+        NULL on older steps, and a dropped one is absent."""
         from pyspark.sql.types import StructType
 
+        head = self.snapshot(until)
+        if head is None:
+            raise FileNotFoundError(f"no committed version under {self.root}")
+        schema = StructType.fromJson(json.loads(head.schema_json))
         relabel = F.col("_change_type")
         if labels == "simple":
             cases = F
             for old, new in self._SIMPLE_LABELS.items():
                 cases = cases.when(relabel == old, F.lit(new))
             relabel = cases.otherwise(relabel)
+
+        def under_head(df: DataFrame, snap: TxSnapshot, kind, version):
+            src = head.names_at(snap)
+            return df.select(
+                kind.alias("_change_type"),
+                F.lit(version).cast("long").alias("_commit_version"),
+                *[
+                    F.col(src[f.name]).alias(f.name)
+                    if src[f.name] in df.columns
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in schema.fields
+                ],
+            )
+
         parts: list[DataFrame] = []
         for st in self._change_steps(
             since, until, labels, skip_content_neutral
         ):
-            version = F.lit(st.version).cast("long").alias("_commit_version")
             if st.dv == "cdf":
+                # sidecars hold the commit's logical names
                 ch = self.spark.read.parquet(*st.files)
-                data_cols = [c for c in ch.columns if c != "_change_type"]
-                parts.append(
-                    ch.select(relabel.alias("_change_type"), version, *data_cols)
-                )
+                parts.append(under_head(ch, st.snap, relabel, st.version))
                 continue
             if st.dv == "semi":
                 # scan WITHOUT the vectors: the rows they name are the
@@ -2214,28 +2240,11 @@ class TxTable:
                 ).drop("_fp", "_pos")
             else:
                 df = self._scan(st.snap, st.files)
-            parts.append(
-                df.select(F.lit(st.tag).alias("_change_type"), version, "*")
-            )
+            parts.append(under_head(df, st.snap, F.lit(st.tag), st.version))
         if not parts:
-            head = self.snapshot(until)
-            schema = StructType.fromJson(
-                json.loads(head.schema_json)
-            ).add("_change_type", "string").add("_commit_version", "long")
             empty = self.spark.createDataFrame([], schema)
-            return empty.select(
-                "_change_type",
-                "_commit_version",
-                *[
-                    c
-                    for c in empty.columns
-                    if c not in ("_change_type", "_commit_version")
-                ],
-            )
-        out = parts[0]
-        for p_ in parts[1:]:
-            out = out.unionByName(p_, allowMissingColumns=True)
-        return out
+            return under_head(empty, head, F.lit(None).cast("string"), 0)
+        return reduce(DataFrame.unionByName, parts)
 
     # ------------------------------------------------- file skipping
 

@@ -1,80 +1,26 @@
-"""Streaming sinks: foreachBatch incremental upsert.
+"""Streaming sinks: foreachBatch incremental upsert, SCD2, CDC apply.
 
-This is the reference's append + ingestion-date maintenance
-(/root/reference/big_uery_handler.py:158-194) made incremental: each
-micro-batch is reconciled/stamped and merged into the target by key.
-
-Two backends:
-
-- ``transactional=True`` (default): the target is a TxTable
-  (sources/txtable.py) — the merge rewrites only the files holding
-  colliding keys (file-granular copy-on-write) and commits atomically,
-  so a crash mid-batch leaves the previous snapshot intact and the
-  foreachBatch replay simply redoes the batch.  This is the 100 TB
-  shape: per-trigger cost is O(batch + files-hit-by-batch-keys), not
-  O(table) — the contract of ``DeltaTable.merge``.
-- ``transactional=False``: plain parquet directory,
-  read-union-dedup-rewrite.  O(table) per trigger, and the overwrite
-  is staged + renamed so the previous table survives a crash up to the
-  final atomic rename (a crash between the two renames leaves the old
-  data recoverable under ``<target>.old``).  Kept for reading the
-  result with a bare ``spark.read.parquet``.
+``foreach_batch_upsert`` is the reference's append + ingestion-date
+maintenance (big_uery_handler.py:158-194) made
+incremental: each micro-batch is stamped and merged into a TxTable
+(sources/txtable.py) by key.  The merge rewrites only the files
+holding colliding keys (file-granular copy-on-write) and commits
+atomically, so a crash mid-batch leaves the previous snapshot intact
+and the foreachBatch replay simply redoes the batch.  Per-trigger cost
+is O(batch + files-hit-by-batch-keys), not O(table) — the contract of
+``DeltaTable.merge``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.fingerprint import df_fingerprint
 from ..sources.ingest import stamp_ingestion_date
 from ..sources.txtable import TxTable
-
-
-def upsert_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    target_dir: str,
-    key: str,
-    run_date: date | None = None,
-    transactional: bool = True,
-) -> None:
-    """Merge one micro-batch into ``target_dir`` keyed by ``key``;
-    newest batch wins on conflict.  Batch rows get Ingestion_date
-    stamped at write time (big_uery_handler.py:183-194 semantics)."""
-    batch = stamp_ingestion_date(batch, run_date)
-    if transactional:
-        TxTable(spark, target_dir).upsert(batch, key)
-        return
-    batch = batch.withColumn("_src_pri", F.lit(0))
-    if os.path.isdir(target_dir):
-        existing = spark.read.parquet(target_dir).withColumn("_src_pri", F.lit(1))
-        merged = batch.unionByName(existing)
-    else:
-        merged = batch
-    w = Window.partitionBy(key).orderBy("_src_pri")
-    deduped = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src_pri")
-    )
-    # Stage the rewrite, then swap via atomic renames: the scan and
-    # the overwrite never race, and the previous table exists on disk
-    # (as <target> or <target>.old) at every instant — a crash cannot
-    # destroy both the old and the new state.
-    stage, old = target_dir + ".stage", target_dir + ".old"
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    deduped.write.parquet(stage)
-    if os.path.isdir(target_dir):
-        os.rename(target_dir, old)
-    os.rename(stage, target_dir)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def foreach_batch_upsert(
@@ -83,13 +29,17 @@ def foreach_batch_upsert(
     target_dir: str,
     key: str,
     run_date: date | None = None,
-    transactional: bool = True,
 ):
-    """writeStream.foreachBatch wiring for upsert_batch; returns the
+    """writeStream.foreachBatch upsert into the TxTable at
+    ``target_dir`` keyed by ``key``; newest batch wins on conflict.
+    Batch rows get Ingestion_date stamped at write time
+    (big_uery_handler.py:183-194 semantics).  Returns the
     StreamingQuery (caller controls trigger/termination)."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_batch(spark, batch_df, target_dir, key, run_date, transactional)
+        TxTable(spark, target_dir).upsert(
+            stamp_ingestion_date(batch_df, run_date), key
+        )
 
     return (
         stream.writeStream.foreachBatch(_apply)

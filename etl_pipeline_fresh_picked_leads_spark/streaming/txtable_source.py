@@ -73,8 +73,9 @@ class _FilePartition(InputPartition):
     change step, or a CDF sidecar (``TxTable._change_steps``)."""
 
     file: str
-    phys: dict  # {logical field: physical column} of the read's
-    # schema; a column the file lacks reads NULL
+    phys: dict  # {logical field: the file's column} of the read's
+    # schema — the physical column, or for a "cdf" sidecar the name
+    # the field had at that commit; a column the file lacks reads NULL
     dv_paths: list[str]  # deletion-vector sidecars naming this file
     dv: str = "anti"  # the step's DV mode: "anti" subtracts the rows
     # the sidecars name, "semi" keeps only them, "cdf" reads ``file``
@@ -124,7 +125,9 @@ def _read_file_partition(part: _FilePartition, logical: StructType):
                     pc.equal(ct, old), pa.scalar(new, pa.string()), ct
                 )
         arrays = [
-            raw.column(f.name) if f.name in avail else pa.nulls(n, f.type)
+            raw.column(part.phys[f.name])
+            if part.phys.get(f.name) in avail
+            else pa.nulls(n, f.type)
             for f in data
         ]
         tbl = pa.Table.from_arrays(
@@ -214,7 +217,8 @@ class _TxStreamReader(DataSourceStreamReader):
         # physical columns every file of every step is read through:
         # a later rename keeps a column's physical name, and files
         # older than an added column lack it (NULL)
-        self.phys = TxTable(None, root).snapshot().phys_names()
+        self.start = TxTable(None, root).snapshot()
+        self.phys = self.start.phys_names()
 
     def initialOffset(self) -> dict:
         # default: start BEFORE the first commit — the initial
@@ -276,7 +280,8 @@ class _TxStreamReader(DataSourceStreamReader):
             p
             for st in t._change_steps(sv, ev, self.cdf_labels)
             for p in _partitions_for(
-                self.phys,
+                # a CDF sidecar holds its commit's logical names
+                self.start.names_at(st.snap) if st.dv == "cdf" else self.phys,
                 st.snap,
                 st.files,
                 dv=st.dv,

@@ -223,34 +223,36 @@ def test_ingest_header_only_csv(spark, tmp_path):
 
 
 def test_ingest_ledger_exactly_once(spark, tmp_path):
-    """Re-landing identical bytes (same or different name) is a no-op
-    when a ledger is attached — exactly-once across reruns."""
-    from etl_pipeline_fresh_picked_leads_spark.sources.ledger import IngestLedger
-
+    """Re-landing identical bytes for the same table is a no-op — the
+    table's transaction log is the ledger (each load's txn tag is its
+    file's checksum), so exactly-once holds across reruns with nothing
+    to attach."""
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
-    ledger_path = str(tmp_path / "ledger.jsonl")
     content = "k,v\n1,a\n2,b\n"
     _write(os.path.join(landing, "ledg_t.csv"), content)
-    r1 = ingest_directory(
-        spark, landing, ledger=IngestLedger(ledger_path)
-    )
+    r1 = ingest_directory(spark, landing)
     assert r1.loaded == ["ledg_t.csv"] and not r1.skipped
     assert spark.table("ledg_t").count() == 2
 
-    # same bytes re-landed under a different name: skipped, no reload
-    _write(os.path.join(landing, "ledg_t_copy.csv"), content)
-    r2 = ingest_directory(
-        spark, landing, ledger=IngestLedger(ledger_path)  # fresh read of ledger
-    )
-    assert r2.skipped == ["ledg_t_copy.csv"] and not r2.loaded
+    # same bytes re-landed under the same name: skipped, no reload
+    _write(os.path.join(landing, "ledg_t.csv"), content)
+    r2 = ingest_directory(spark, landing)
+    assert r2.skipped == ["ledg_t.csv"] and not r2.loaded
     assert spark.table("ledg_t").count() == 2  # unchanged
 
     # genuinely new bytes load normally
     _write(os.path.join(landing, "ledg_t.csv"), "k,v\n3,c\n")
-    r3 = ingest_directory(spark, landing, ledger=IngestLedger(ledger_path))
+    r3 = ingest_directory(spark, landing)
     assert r3.loaded == ["ledg_t.csv"]
     assert spark.table("ledg_t").count() == 3
+
+    # exactly-once is per table: the same bytes under another stem
+    # load into that other table
+    _write(os.path.join(landing, "ledg_t_copy.csv"), content)
+    r4 = ingest_directory(spark, landing)
+    assert r4.loaded == ["ledg_t_copy.csv"]
+    assert spark.table("ledg_t_copy").count() == 2
 
 
 def test_ingest_error_isolation(spark, tmp_path):
@@ -279,31 +281,99 @@ def test_ingest_parallel_multi_table(spark, tmp_path):
         assert spark.table(f"par_t{i}").count() == 1
 
 
-def test_ingest_pending_intent_blocks_reload(spark, tmp_path):
-    """A dangling 'loading' intent (crash between the append commit
-    and the ledger record) must NOT silently re-load: the file is
-    reported pending and left in place until reconciled."""
-    from etl_pipeline_fresh_picked_leads_spark.sources.ledger import (
-        IngestLedger,
-        file_checksum,
-    )
+def test_ingest_crash_before_archive_is_skipped(spark, tmp_path):
+    """A crash between a file's commit and its archive (the file was
+    loaded but is still in landing) reloads nothing on the rerun: the
+    file is reported skipped and archived, with no operator step."""
+    from etl_pipeline_fresh_picked_leads_spark.sources.ingest import ingest_csv
 
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
     path = os.path.join(landing, "pend_t.csv")
     _write(path, "k,v\n1,a\n")
-    ledger_path = str(tmp_path / "ledger.jsonl")
-    # simulate the crashed run: intent recorded, no terminal status
-    IngestLedger(ledger_path).record(
-        file_checksum(path), "pend_t.csv", "pend_t", "loading"
-    )
-    r = ingest_directory(spark, landing, ledger=IngestLedger(ledger_path))
-    assert r.pending == ["pend_t.csv"] and not r.loaded
-    assert os.path.exists(path)  # left in place for reconciliation
-    # operator reconciles (rows never landed) -> mark failed -> reloads
-    IngestLedger(ledger_path).record(
-        file_checksum(path), "pend_t.csv", "pend_t", "failed"
-    )
-    r2 = ingest_directory(spark, landing, ledger=IngestLedger(ledger_path))
-    assert r2.loaded == ["pend_t.csv"]
+    assert ingest_csv(spark, path) is True  # committed, never archived
     assert spark.table("pend_t").count() == 1
+    spark.catalog.dropTempView("pend_t")  # the rerun is a fresh process
+    r = ingest_directory(spark, landing)
+    assert r.skipped == ["pend_t.csv"] and not r.loaded and not r.failed
+    assert spark.table("pend_t").count() == 1
+    assert os.listdir(os.path.join(landing, "processed")) == ["pend_t.csv"]
+
+
+def test_ingest_refuses_root_without_log(spark, tmp_path):
+    """A table root that holds files but no transaction log (a table
+    written some other way) fails that file's load, naming the
+    directory, and its rows stay where they were."""
+    from etl_pipeline_fresh_picked_leads_spark.sources.catalog import table_root
+
+    root = table_root(spark, "legacy_t")
+    spark.range(3).write.parquet(root)
+    landing = str(tmp_path)
+    _write(os.path.join(landing, "legacy_t.csv"), "id\n7\n")
+    r = ingest_directory(spark, landing, archive=False)
+    assert not r.loaded and root in r.failed["legacy_t.csv"]
+    assert spark.read.parquet(root).count() == 3
+
+
+def test_reconciled_append_reads_widened_integer(spark, tmp_path):
+    """Every load infers its types before reconciling: ``"123.0"``
+    landing in a BIGINT column infers as a double and try_casts to
+    123, the reference's SAFE_CAST from autodetected staging types."""
+    landing = str(tmp_path)
+    _write(os.path.join(landing, "wide_t.csv"), "id,employees\n1,5000000000\n")
+    assert ingest_directory(spark, landing).loaded == ["wide_t.csv"]
+    assert dict(spark.table("wide_t").dtypes)["employees"] == "bigint"
+    _write(os.path.join(landing, "wide_t.csv"), "id,employees\n2,123.0\n")
+    assert ingest_directory(spark, landing).loaded == ["wide_t.csv"]
+    got = {r.id: r.employees for r in spark.table("wide_t").collect()}
+    assert got == {1: 5000000000, 2: 123}
+
+
+_NEXT_DAY = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from etl_pipeline_fresh_picked_leads_spark.session import build_session
+from etl_pipeline_fresh_picked_leads_spark.sources.ingest import ingest_directory
+
+spark = build_session(
+    app_name="fpl-next-day", master="local[1]", shuffle_partitions="1",
+    extra_conf={"spark.sql.warehouse.dir": sys.argv[2],
+                "spark.ui.enabled": "false"},
+)
+try:
+    r = ingest_directory(spark, sys.argv[3])
+    print("RESULT", r.loaded, r.failed, flush=True)
+    print("ROWS", spark.table("fresh_t").count())
+finally:
+    spark.stop()
+"""
+
+
+def test_ingest_next_day_in_fresh_process(spark, tmp_path):
+    """The daily batch: day 1 loads in this process, day 2 loads the
+    same table from a fresh process pointed at the same warehouse —
+    the table is found through its transaction log, not the session
+    catalog, and both days' rows read by name."""
+    import subprocess
+    import sys
+
+    from etl_pipeline_fresh_picked_leads_spark.sources.catalog import register_view
+
+    day1, day2 = str(tmp_path / "day1"), str(tmp_path / "day2")
+    os.makedirs(day1)
+    os.makedirs(day2)
+    _write(os.path.join(day1, "fresh_t.csv"), "k,v\n1,a\n2,b\n")
+    _write(os.path.join(day2, "fresh_t.csv"), "v,k\nc,3\n")
+    assert ingest_directory(spark, day1).loaded == ["fresh_t.csv"]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    child = subprocess.run(
+        [sys.executable, "-c", _NEXT_DAY, repo, wh, day2],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "RESULT ['fresh_t.csv'] {}\n" in child.stdout, child.stdout
+    assert "ROWS 3\n" in child.stdout, child.stderr[-2000:]
+    assert child.returncode == 0, child.stderr[-2000:]
+    register_view(spark, "fresh_t")  # this session's view predates day 2
+    got = sorted((r.k, r.v) for r in spark.table("fresh_t").collect())
+    assert got == [(1, "a"), (2, "b"), (3, "c")]

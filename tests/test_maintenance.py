@@ -1,4 +1,5 @@
-"""At-rest maintenance (R12/R13 literal form), config, error hook."""
+"""At-rest Annotate on a lead table (R12/R13 literal form), config,
+error hook."""
 
 from __future__ import annotations
 
@@ -11,16 +12,20 @@ from etl_pipeline_fresh_picked_leads_spark.errors import (
     log_exception,
     register_reporter,
 )
+from etl_pipeline_fresh_picked_leads_spark.sources.catalog import table_root
 from etl_pipeline_fresh_picked_leads_spark.sources.maintenance import (
     ensure_ingestion_date_column,
     set_ingestion_date_where_null,
 )
+from etl_pipeline_fresh_picked_leads_spark.sources.txtable import TxTable
 
 
 def test_update_where_null_at_rest(spark):
-    spark.createDataFrame(
-        [Row(k=1), Row(k=2), Row(k=3)]
-    ).write.mode("overwrite").saveAsTable("maint_t")
+    TxTable.create(
+        spark,
+        table_root(spark, "maint_t"),
+        spark.createDataFrame([Row(k=1), Row(k=2), Row(k=3)]),
+    )
     # ADD COLUMN (big_uery_handler.py:173-181)
     assert ensure_ingestion_date_column(spark, "maint_t") is True
     assert ensure_ingestion_date_column(spark, "maint_t") is False

@@ -146,8 +146,8 @@ def test_streaming_dedup_two_batches(spark, replay_dir):
 
 
 def test_foreach_batch_upsert_idempotent_merge(spark, replay_dir, tmp_path):
-    """Transactional (TxTable) backend: exactly-one-row-per-key and
-    full stamping after the replay."""
+    """TxTable upsert: exactly one row per key and full stamping
+    after the replay."""
     from etl_pipeline_fresh_picked_leads_spark.sources.txtable import TxTable
 
     target = str(tmp_path / "tbl")
@@ -160,16 +160,3 @@ def test_foreach_batch_upsert_idempotent_merge(spark, replay_dir, tmp_path):
     assert final.count() == final.select("event_id").distinct().count()
     assert final.filter(F.col("Ingestion_date").isNull()).count() == 0
 
-
-def test_foreach_batch_upsert_plain_parquet(spark, replay_dir, tmp_path):
-    """Legacy backend: same invariants on a bare parquet directory
-    (staged-rename rewrite), readable with plain spark.read."""
-    target = str(tmp_path / "tbl_plain")
-    s = _stream(spark, replay_dir["dir"]).select(
-        "event_id", "user_id", "ts", "value"
-    )
-    q = foreach_batch_upsert(s, spark, target, "event_id", transactional=False)
-    assert q.awaitTermination(120)
-    final = spark.read.parquet(target)
-    assert final.count() == final.select("event_id").distinct().count()
-    assert final.filter(F.col("Ingestion_date").isNull()).count() == 0

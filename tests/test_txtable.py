@@ -14,8 +14,9 @@ from datetime import date
 import pytest
 from pyspark.sql import functions as F
 
+from etl_pipeline_fresh_picked_leads_spark.sources.catalog import table_root
 from etl_pipeline_fresh_picked_leads_spark.sources.maintenance import (
-    set_ingestion_date_where_null_tx,
+    set_ingestion_date_where_null,
 )
 from etl_pipeline_fresh_picked_leads_spark.sources.txtable import (
     TxConflictError,
@@ -117,11 +118,11 @@ def test_vacuum_drops_old_versions(spark, tmp_path):
     assert [r.k for r in t.read().collect()] == [2]
 
 
-def test_tx_ingestion_date_backfill(spark, tmp_path):
-    """R13 at-rest UPDATE (big_uery_handler.py:183-194) on a TxTable:
-    only NULL rows get the run date, and only files containing NULLs
-    are rewritten."""
-    root = str(tmp_path / "t")
+def test_tx_ingestion_date_backfill(spark):
+    """R13 at-rest UPDATE (big_uery_handler.py:183-194) on a lead
+    table: only NULL rows get the run date, and only files containing
+    NULLs are rewritten."""
+    root = table_root(spark, "tx_backfill_t")
     stamped = spark.createDataFrame(
         [(1, date(2024, 1, 1))], "k int, Ingestion_date date"
     ).coalesce(1)
@@ -131,7 +132,7 @@ def test_tx_ingestion_date_backfill(spark, tmp_path):
     t = TxTable.create(spark, root, stamped)
     t.append(unstamped)
     before = t.snapshot()
-    n = set_ingestion_date_where_null_tx(spark, root, date(2025, 6, 1))
+    n = set_ingestion_date_where_null(spark, "tx_backfill_t", date(2025, 6, 1))
     assert n == 2
     after = TxTable(spark, root).snapshot()
     assert set(before.files) & set(after.files), "stamped file was rewritten"
@@ -144,7 +145,10 @@ def test_tx_ingestion_date_backfill(spark, tmp_path):
         3: date(2025, 6, 1),
     }
     # idempotent: second run touches nothing
-    assert set_ingestion_date_where_null_tx(spark, root, date(2025, 6, 2)) == 0
+    assert (
+        set_ingestion_date_where_null(spark, "tx_backfill_t", date(2025, 6, 2))
+        == 0
+    )
 
 
 def test_compact_coalesces_small_files(spark, tmp_path):

@@ -475,6 +475,31 @@ def test_read_changes_empty_window_and_missing_since(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         t.read_changes(99)
 
+def test_read_changes_keeps_a_renamed_column_whole(spark, tmp_path):
+    """A column renamed inside the window is ONE column of the feed,
+    under the ``until`` snapshot's name, with values on both sides of
+    the rename — data-file steps and the update's CDF sidecar alike."""
+    schema = "k bigint, price double"
+    t = TxTable.create(
+        spark, str(tmp_path / "t"), spark.createDataFrame([(1, 10.0)], schema)
+    )
+    t.append(spark.createDataFrame([(2, 20.0)], schema))  # v2
+    t.rename_column("price", "amount")  # v3
+    t.append(spark.createDataFrame([(3, 30.0)], "k bigint, amount double"))
+    t.update(F.col("k") == 1, {"amount": F.lit(11.0)})  # v5
+    ch = t.read_changes(1)
+    assert ch.columns == ["_change_type", "_commit_version", "k", "amount"]
+    got = sorted(
+        (r._commit_version, r._change_type, r.k, r.amount) for r in ch.collect()
+    )
+    assert got == [
+        (2, "insert", 2, 20.0),
+        (4, "insert", 3, 30.0),
+        (5, "delete", 1, 10.0),
+        (5, "insert", 1, 11.0),
+    ], got
+
+
 def test_read_changes_restore_applies_dvs_to_added_files(spark, tmp_path):
     """ADVICE r9 (medium): a commit that (re-)adds DV-carrying files —
     restore() to a DV'd version — must read the added files under the

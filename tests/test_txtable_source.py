@@ -993,3 +993,36 @@ def test_change_feed_partitions_across_add_and_rename_column(reg, tmp_path):
         (1, "insert", 2, "b", None),
         (3, "insert", 3, "c", 3.0),
     ], got
+
+
+def test_change_feed_reads_cdf_sidecar_across_rename(reg, tmp_path):
+    """A CoW update's CDF sidecar holds the column names of its commit;
+    after a rename, batch read_changes and the stream's partitions both
+    read it under the new name (by physical column), never NULL."""
+    from etl_pipeline_fresh_picked_leads_spark.streaming.txtable_source import (
+        _TxStreamReader,
+    )
+
+    spark = reg
+    root = str(tmp_path / "t")
+    t = TxTable.create(
+        spark, root, spark.createDataFrame([(1, 10.0)], "k bigint, price double")
+    )
+    t.update(F.col("k") == 1, {"price": F.lit(11.0)})  # v2: sidecar
+    t.rename_column("price", "amount")
+    batch = sorted(
+        (r._commit_version, r._change_type, r.k, r.amount)
+        for r in t.read_changes(0).collect()
+    )
+    reader = _TxStreamReader(root, t.read().schema, change_feed=True)
+    got = sorted(
+        (r["_commit_version"], r["_change_type"], r["k"], r["amount"])
+        for p in reader._partitions({"version": 0}, {"version": 3})
+        for b in reader.read(p)
+        for r in b.to_pylist()
+    )
+    assert got == batch == [
+        (1, "insert", 1, 10.0),
+        (2, "delete", 1, 10.0),
+        (2, "insert", 1, 11.0),
+    ], (got, batch)
