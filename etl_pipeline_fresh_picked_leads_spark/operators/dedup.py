@@ -27,6 +27,10 @@ corpus; at 100 TB the 256 MB defaults trip on the same shape).
 
 from __future__ import annotations
 
+import weakref
+
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,22 +58,24 @@ _LONG_MAX = (1 << 63) - 1
 # functions of engine constants, reusable across frames and queries,
 # carrying no data and no results (a memo of RESULT rows would be the
 # banned precomputation pattern; a Column is the same class of object
-# as a compiled regex).  Keyed on the live SparkContext so a context
-# restart (fresh JVM gateway) rebuilds instead of dereferencing stale
-# JVM handles.
-_COL_MEMO: dict = {}
+# as a compiled regex).  Keyed weakly on the live SparkContext OBJECT,
+# so a context restart (fresh JVM gateway) rebuilds instead of
+# dereferencing stale JVM handles — an ``id()`` key could be recycled
+# by the new context at the old one's address — and a dead context's
+# Columns go with it.
+_COL_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _memo_col(key: tuple, build):
     from pyspark import SparkContext
 
-    ctx = id(SparkContext._active_spark_context)
-    k = (ctx,) + key
-    col = _COL_MEMO.get(k)
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return build()  # nothing to bind to: no memo
+    memo = _COL_MEMO.setdefault(sc, {})
+    col = memo.get(key)
     if col is None:
-        if any(ek[0] != ctx for ek in _COL_MEMO):
-            _COL_MEMO.clear()  # context restarted: drop stale JVM refs
-        col = _COL_MEMO[k] = build()
+        col = memo[key] = build()
     return col
 
 
@@ -141,11 +147,14 @@ def _parallel(docs: DataFrame) -> DataFrame:
             )
             if max(len(files), -(-total // mpb)) >= floor:
                 return docs
-        return docs.repartition(target)
-    except Exception:  # pragma: no cover - non-local/opaque sources
-        if docs.rdd.getNumPartitions() < floor:
             return docs.repartition(target)
-        return docs
+    except (OSError, ValueError, Py4JError, PySparkException):
+        pass  # a remote or opaque file list, unreadable sizes
+    # no file list (a format("txtable") or in-memory frame) or an
+    # unreadable one: the exact probe
+    if docs.rdd.getNumPartitions() < floor:
+        return docs.repartition(target)
+    return docs
 
 
 def _with_shingles(docs: DataFrame, n: int = 3) -> DataFrame:

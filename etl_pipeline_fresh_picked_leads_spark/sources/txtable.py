@@ -1676,10 +1676,11 @@ class TxTable:
         (reference R12, big_uery_handler.py:171-181 — there a BigQuery
         schema patch): the new manifest carries the same file list
         with an extended schema; existing files are never rewritten
-        and read as NULL in the new column.  Contrast
-        ``maintenance.add_column``, which rewrites a raw parquet dir
-        O(table) — on a 100 TB table only the metadata form is
-        viable.  Idempotent: adding an existing column is a no-op.
+        and read as NULL in the new column, so the cost is one manifest
+        whatever the table's size (the at-rest Annotate,
+        ``maintenance.set_ingestion_date_where_null``, adds its
+        ``Ingestion_date`` column this way).  Idempotent: adding an
+        existing column is a no-op.
 
         Re-adding a previously DROPPED name is safe (r8): the new
         column gets a fresh field id and a fresh PHYSICAL name, so old
@@ -2997,7 +2998,9 @@ class TxTable:
                 schema_json=self._schema_of(batch),
                 stats=self._merged_stats(None, [], self._stats_for(new)),
             )
-        keys = F.broadcast(batch.select(key).distinct())
+        # keys and rkeys feed only semi/anti joins, where a repeated
+        # key changes nothing: no distinct, so no shuffle job
+        keys = F.broadcast(batch.select(key))
 
         def effect(hit: DataFrame, n: int) -> _Effect:
             # exact CDF (r10): replaced rows are the semi-join of the
@@ -3007,7 +3010,9 @@ class TxTable:
             # insert, so its added files are exactly the batch.
             b = batch.select(*hit.columns)
             replaced = hit.join(keys, key, "left_semi")
-            rkeys = F.broadcast(replaced.select(key).distinct())
+            # n rows, not batch-bounded (a target may repeat a key):
+            # Spark's size estimate, not a hint, picks the join
+            rkeys = replaced.select(key)
             return _Effect(
                 rewrite=hit.join(keys, key, "left_anti"),
                 insert=b,
@@ -3150,9 +3155,14 @@ class TxTable:
         expression, never written to the table.
 
         Scale shape: only files containing a source key are rewritten
-        (semi-join on broadcast batch keys, the upsert scaffold), the
-        full-outer clause resolution runs over affected-files ∪ batch,
-        and when no matched clause fires the affected files are
+        (semi-join on broadcast batch keys, the upsert scaffold).
+        Within them, only the rows sharing a batch key meet the source
+        — the clause join is ``source LEFT JOIN those rows``, batch-
+        sized, and it alone is cached and counted; every other row of a
+        rewritten file streams from the scan to the write with no join,
+        shuffle or cache.  The ambiguity guard is the same count: the
+        matched pairs may not outnumber the target rows the search
+        found.  When no matched clause fires the affected files are
         carried BY REFERENCE and only inserts are written — cost ∝
         the batch and the slice it touches, never the table.  With
         ``txn`` the merge is exactly-once under replay (checked BEFORE
@@ -3241,39 +3251,39 @@ class TxTable:
                 raise ValueError(f"merge update targets unknown columns {bad}")
         if mode not in ("cow", "dv"):
             raise ValueError(f"merge mode must be 'cow' or 'dv', got {mode!r}")
-        # four consumers before the clause join materializes (key-bound
-        # agg, broadcast distinct keys, ambiguity flag, the s side of
-        # the full outer) — a source derived from the table itself
-        # would re-run its whole lineage per job (CLAUDE.md trap).
+        # three consumers before the clause join materializes (key-bound
+        # agg, the broadcast batch keys, the s side of the clause join)
+        # — a source derived from the table itself would re-run its
+        # whole lineage per job (CLAUDE.md trap).
         # No eager count (r15): the consumers run SEQUENTIALLY, so the
         # first job (the candidate-bounds agg below) materializes the
         # cache; the explicit count was one extra pass over the source.
         src = source.select(*cols, *extra).persist()
         has_matched_clause = update is not None or delete_condition is not None
-        bkeys = F.broadcast(src.select(*keys).distinct())
-        taken = set(cols) | set(extra)
-
-        def fresh(name: str) -> str:  # a user column may be shaped like ours
-            while name in taken:
-                name = "_" + name
-            return name
-
-        tm, sm = fresh("_t_marker"), fresh("_s_marker")
+        # feeds only semi/anti joins, where a repeated key changes
+        # nothing: no distinct, so no shuffle job
+        bkeys = F.broadcast(src.select(*keys))
         joins: list[DataFrame] = []  # the persisted clause join
         counts: dict = {}  # the clause counts the effect finds
 
         def effect(hit: DataFrame, n: int) -> _Effect:
-            t = hit.withColumn(tm, F.lit(True)).alias("t")
-            s = src.withColumn(sm, F.lit(True)).alias("s")
+            # Only the NEAR rows (a key the batch holds: exactly the n
+            # rows the search counted) can meet a source row.  FAR rows
+            # stream from the scan into the rewrite — no join, shuffle
+            # or cache.  Every near row matches, so near FULL OUTER src
+            # is src LEFT JOIN near: batch-sized, with Spark's own size
+            # estimate (or AQE at run time) choosing the strategy, so a
+            # target with many rows per key is never forced into a
+            # broadcast.
+            far = hit.join(bkeys, keys, "left_anti")
+            t = hit.join(bkeys, keys, "left_semi").alias("t")
+            s = src.alias("s")
             join_cond = None
             for k in keys:
                 c = F.col(f"t.{k}") == F.col(f"s.{k}")
                 join_cond = c if join_cond is None else (join_cond & c)
-            matched = (
-                F.col(f"t.{tm}").isNotNull()
-                & F.col(f"s.{sm}").isNotNull()
-            )
-            src_only = F.col(f"t.{tm}").isNull()
+            # a near row's key is never NULL (equality semi-join)
+            matched = F.col(f"t.{keys[0]}").isNotNull()
             do_update = (
                 matched
                 & F.lit(update is not None)
@@ -3286,7 +3296,7 @@ class TxTable:
                 & self._merge_cond(delete_condition, False)
             )
             do_insert = (
-                src_only
+                ~matched
                 & F.lit(bool(insert))
                 & self._merge_cond(insert_condition, True)
             )
@@ -3304,60 +3314,26 @@ class TxTable:
                 .alias(c)
                 for c in cols
             ]
-            keep = (matched & ~do_delete) | (~src_only & ~matched) | do_insert
-            j = t.join(s, join_cond, "full_outer").persist()
+            keep = (matched & ~do_delete) | do_insert
+            j = s.join(t, join_cond, "left").persist()
             joins.append(j)
-            clause_counts = [
+            n_upd, n_del, n_ins, pairs = j.agg(
                 F.count(F.when(do_update, 1)),
                 F.count(F.when(do_delete, 1)),
                 F.count(F.when(do_insert, 1)),
-            ]
-            if n and has_matched_clause:
+                F.count(F.when(matched, 1)),
+            ).first()
+            if has_matched_clause and pairs > n:
                 # Delta's ambiguous-merge guard (>1 source rows hitting
-                # one target row has no deterministic outcome), folded
-                # into the SAME aggregate job as the clause counts
-                # (r15 — it was a separate scan of the affected files):
-                # a batch-sized dup-key flag broadcast-joins onto the
-                # persisted clause join; any matched row carrying the
-                # flag is ambiguous.  The probe join exists only under
-                # this agg — the result/CDF frames still read the bare
-                # persisted join.
-                dup_col = fresh("_dup_src")
-                dks = [fresh(f"_dk{i}") for i in range(len(keys))]
-                dupflag = F.broadcast(
-                    src.groupBy(*keys)
-                    .agg((F.count(F.lit(1)) > F.lit(1)).alias(dup_col))
-                    .select(
-                        *[
-                            F.col(k).alias(dk)
-                            for k, dk in zip(keys, dks)
-                        ],
-                        dup_col,
-                    )
+                # one target row has no deterministic outcome): each of
+                # the n near rows meets at least one source row, so more
+                # matched pairs than rows means one met several
+                raise ValueError(
+                    f"merge: {pairs} matched pairs for {n} target rows — "
+                    "a target row is matched by multiple source rows; "
+                    f"deduplicate the source on {keys} first "
+                    "(Delta raises here too)"
                 )
-                dcond = None
-                for k, dk in zip(keys, dks):
-                    c = F.col(f"s.{k}") == F.col(dk)
-                    dcond = c if dcond is None else (dcond & c)
-                n_upd, n_del, n_ins, n_amb = (
-                    j.join(dupflag, dcond, "left")
-                    .agg(
-                        *clause_counts,
-                        F.count(
-                            F.when(matched & F.col(dup_col), 1)
-                        ),
-                    )
-                    .first()
-                )
-                if n_amb:
-                    raise ValueError(
-                        f"merge: {n_amb} matched pair(s) involve a "
-                        "target row matched by multiple source rows; "
-                        f"deduplicate the source on {keys} first "
-                        "(Delta raises here too)"
-                    )
-            else:
-                n_upd, n_del, n_ins = j.agg(*clause_counts).first()
             counts.update(updated=n_upd, deleted=n_del, inserted=n_ins)
             fired = j.filter(do_update | do_delete)
             post = j.filter(do_update | do_insert).select(*out_cols)
@@ -3379,7 +3355,7 @@ class TxTable:
                 # file diff (which would re-emit every carried-along
                 # row of the rewritten files)
                 return _Effect(
-                    rewrite=j.filter(keep).select(*out_cols),
+                    rewrite=far.unionByName(j.filter(keep).select(*out_cols)),
                     changed=post,
                     cdf=fired.select(
                         *[F.col(f"t.{c}").alias(c) for c in cols],

@@ -1317,3 +1317,94 @@ def test_remove_dup_spans_key_slicing_is_exact(spark):
         map(tuple, remove_dup_spans(docs, n=5, key_slices=3).collect())
     )
     assert one == sliced
+
+
+def test_parallel_probes_frames_without_input_files(spark):
+    """A frame with no file list (in-memory, or a ``format("txtable")``
+    read) is sized by the exact partition probe: one already split is
+    returned as it is, a single partition fans out."""
+    from etl_pipeline_fresh_picked_leads_spark.operators.dedup import _parallel
+
+    cores = spark.sparkContext.defaultParallelism
+    split = spark.range(0, 64, 1, numPartitions=max(2, cores))
+    assert split.inputFiles() == []
+    assert _parallel(split) is split
+    one = spark.range(0, 64, 1, numPartitions=1)
+    assert "Repartition" in _parallel(one)._jdf.queryExecution().logical().toString()
+
+
+def test_memo_col_rebuilds_for_a_new_context(monkeypatch):
+    """Memoized Columns belong to the SparkContext that built them: a
+    new context, even one allocated where a dead one lived, rebuilds."""
+    import gc
+
+    from pyspark import SparkContext
+
+    from etl_pipeline_fresh_picked_leads_spark.operators import dedup
+
+    class Ctx:
+        pass
+
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", Ctx())
+    first = dedup._memo_col(("memo-test",), build)
+    assert dedup._memo_col(("memo-test",), build) is first
+    # drop the only reference, so the next context may reuse its address
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    gc.collect()
+    monkeypatch.setattr(SparkContext, "_active_spark_context", Ctx())
+    assert dedup._memo_col(("memo-test",), build) is not first
+    assert len(builds) == 2
+
+
+_MEMO_RESTART = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import SparkContext
+from etl_pipeline_fresh_picked_leads_spark.operators import dedup
+from etl_pipeline_fresh_picked_leads_spark.session import build_session
+
+def shingled():
+    spark = build_session(
+        app_name="fpl-memo-restart", master="local[1]", shuffle_partitions="1",
+        extra_conf={"spark.ui.enabled": "false"},
+    )
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    got = sorted((r.doc_id, sorted(r.sh)) for r in dedup._with_shingles(docs).collect())
+    return spark, got
+
+spark, first = shingled()
+spark.stop()
+spark, second = shingled()
+try:
+    print("SAME", first == second and len(first) == 2)
+    memo = dedup._COL_MEMO.get(SparkContext._active_spark_context, {})
+    print("BOUND", ("str_sh", 3) in memo)
+finally:
+    spark.stop()
+"""
+
+
+def test_memo_col_survives_session_stop_and_rebuild(tmp_path):
+    """Stopping the session and building a new one in the same process
+    (same JVM) rebuilds the memoized Columns for the new context, and
+    the shingling they drive gives the same result."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [sys.executable, "-c", _MEMO_RESTART, repo],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path),
+    )
+    assert child.returncode == 0, child.stderr[-2000:]
+    assert "SAME True\n" in child.stdout, child.stdout
+    assert "BOUND True\n" in child.stdout, child.stdout

@@ -1223,6 +1223,127 @@ def test_merge_multi_target_rows_per_source_key(spark, tmp_path):
     assert got == [(1, "X", 99.0), (1, "X", 99.0), (2, "b", 20.0)]
 
 
+def _ancestors(lines: list, i: int) -> list:
+    """The nodes of a plan tree string on the path from line ``i`` up
+    to the root, stripped of tree marks and codegen stage ids."""
+    import re
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    d, out = depth(lines[i]), []
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            out.append(re.sub(r"^\*\(\d+\) ", "", line.lstrip(" :+-")))
+            d = depth(line)
+    return out
+
+
+def test_merge_rewrite_streams_unmatched_rows_without_a_shuffle(spark, tmp_path):
+    """Merge joins only the target rows that share a batch key; the
+    rest of each rewritten file goes from the scan to the write.  So
+    no written frame plans a SortMergeJoin, and no target scan sits
+    under a shuffle Exchange (the batch-sized clause join may
+    broadcast its matched rows)."""
+    root = str(tmp_path / "t")
+    rows = spark.range(400).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("n"), F.col("id").cast("string")).alias("name"),
+        F.col("id").cast("double").alias("price"),
+    )
+    t = TxTable.create(spark, root, rows.repartitionByRange(4, "k"))
+    assert len(t.snapshot().files) == 4
+    plans = []
+    write = t._write_data
+
+    def spy(df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(df, *a, **kw)
+
+    t._write_data = spy
+    res = t.merge(
+        _pdf(spark, [(3, "x", 1.0), (250, "y", 2.0), (1000, "z", 3.0)]), "k"
+    )
+    assert (res["updated"], res["deleted"], res["inserted"]) == (2, 0, 1)
+    assert plans
+    for plan in plans:
+        assert "SortMergeJoin" not in plan, plan
+        lines = plan.splitlines()
+        scans = [i for i, line in enumerate(lines) if "FileScan parquet" in line]
+        assert scans, plan
+        for i in scans:
+            above = _ancestors(lines, i)
+            assert not any(
+                a.startswith(("Exchange", "ShuffleQueryStage")) for a in above
+            ), plan
+    got = {r.k: r.name for r in t.read().collect()}
+    assert len(got) == 401
+    assert (got[3], got[250], got[1000], got[4]) == ("x", "y", "z", "n4")
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+def test_merge_one_source_row_updates_every_target_row_of_its_key(
+    spark, tmp_path, mode
+):
+    """The ambiguity guard counts matched pairs against target rows,
+    so one source row meeting two target rows (in two files) is two
+    pairs for two rows: no raise, both rows update."""
+    root = str(tmp_path / "t")
+    t = TxTable.create(spark, root, _pdf(spark, [(1, "a", 1.0)]).coalesce(1))
+    t.append(_pdf(spark, [(1, "a2", 2.0), (2, "b", 3.0)]).coalesce(1))
+    res = t.merge(_pdf(spark, [(1, "X", 9.0)]), "k", mode=mode)
+    assert (res["updated"], res["inserted"]) == (2, 0)
+    got = sorted((r.k, r.name) for r in t.read().collect())
+    assert got == [(1, "X"), (1, "X"), (2, "b")]
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+def test_merge_guard_ignores_dv_deleted_rows(spark, tmp_path, mode):
+    """A DV-deleted row that shares a key with a live row is not a
+    target row: the search does not count it and the clause join does
+    not meet it, so one source row updates the live row alone."""
+    root = str(tmp_path / "t")
+    t = TxTable.create(
+        spark,
+        root,
+        _pdf(spark, [(1, "gone", 1.0), (1, "live", 2.0), (2, "b", 3.0)]).coalesce(1),
+    )
+    t.delete_dv(F.col("name") == "gone")
+    res = t.merge(_pdf(spark, [(1, "X", 9.0)]), "k", mode=mode)
+    assert (res["updated"], res["inserted"]) == (1, 0)
+    got = sorted((r.k, r.name) for r in t.read().collect())
+    assert got == [(1, "X"), (2, "b")]
+
+
+def test_merge_null_keys_and_unmatched_duplicates_insert_beside_updates(
+    spark, tmp_path
+):
+    """With the update clause active, NULL-keyed source rows and
+    duplicated source keys that match nothing all insert; a NULL-keyed
+    target row is never matched and stays as it was."""
+    root = str(tmp_path / "t")
+    t = TxTable.create(
+        spark, root, _pdf(spark, [(1, "a", 1.0), (None, "tnul", 2.0)]).coalesce(1)
+    )
+    src = _pdf(
+        spark,
+        [
+            (1, "X", 9.0),
+            (None, "s1", 5.0),
+            (None, "s2", 6.0),
+            (100, "p", 7.0),
+            (100, "q", 8.0),
+        ],
+    )
+    res = t.merge(src, "k")
+    assert (res["updated"], res["inserted"]) == (1, 4)
+    got = sorted((str(r.k), r.name) for r in t.read().collect())
+    assert got == [
+        ("1", "X"), ("100", "p"), ("100", "q"),
+        ("None", "s1"), ("None", "s2"), ("None", "tnul"),
+    ]
+
+
 def test_replace_where_file_granular(spark, tmp_path):
     """Only files holding predicate-matching rows are rewritten; the
     slice is swapped atomically in ONE commit."""
@@ -1404,8 +1525,7 @@ def test_cdc_apply_batch_collapses_and_applies_all_ops(spark, tmp_path):
 def test_merge_source_derived_from_target_table(spark, tmp_path):
     """Self-referential merge: the source is computed FROM the current
     table state (the compact-and-reprice pattern).  The t/s aliasing
-    must keep the two lineages distinct through the full-outer clause
-    join."""
+    must keep the two lineages distinct through the clause join."""
     root = str(tmp_path / "t")
     t = TxTable.create(
         spark, root, _pdf(spark, [(1, "a", 10.0), (2, "b", 20.0)])
@@ -1422,8 +1542,9 @@ def test_merge_source_derived_from_target_table(spark, tmp_path):
 
 
 def test_merge_on_table_with_marker_shaped_columns(spark, tmp_path):
-    """A user schema containing '_t_marker'/'_s_marker' must not
-    collide with merge's internal class flags."""
+    """A user schema with columns named '_t_marker'/'_s_marker' merges
+    like any other: merge adds no columns of its own to the clause
+    join, so no user name can collide with one."""
     root = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(1, True, False)], "k bigint, _t_marker boolean, _s_marker boolean"
