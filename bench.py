@@ -96,8 +96,8 @@ HEADLINE = [
     "q_graph_closure",
     "q_txtable_constraint",
     # r8: full MERGE INTO — semi-join affected-file search with
-    # manifest-stats candidate pruning + one full-outer clause
-    # resolution (q_stream_cdc_apply stays out: micro-batch startup
+    # manifest-stats candidate pruning + one batch-sized clause
+    # join (q_stream_cdc_apply stays out: micro-batch startup
     # would dominate the measurement, like the other J-tier rows)
     "q_txtable_merge",
     # r9: merge-on-read mutations — sidecar write + anti-join read,
